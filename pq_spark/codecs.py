@@ -7,7 +7,7 @@ need nothing beyond the standard library:
   spec-compliant encode (filter 0 scanlines, zlib IDAT, CRC-checked
   chunks) and decode (all five scanline filters incl. Paeth, multi-IDAT,
   CRC validation, bpp-aware). Any external PNG of these shapes decodes
-  here; our thumbnails open in any viewer. Filters 0/1/2 decode
+  here; our encoded images open in any viewer. Filters 0/1/2 decode
   vectorized (Sub = per-channel cumsum mod 256); Average/Paeth remain
   per-pixel Python — fine for thumbnail-sized images, O(h·w) interpreter
   cost on megapixel external files.
@@ -16,8 +16,9 @@ need nothing beyond the standard library:
 Video remains a documented seam (an MJPEG-style container of PNG frames —
 see multimodal.py): real ffmpeg integration needs the native library.
 
-Pure functions over bytes/ndarrays — no Spark imports — so the
-mapInPandas codecs in multimodal.py stay trivially testable.
+Pure functions over bytes/ndarrays — no Spark imports. ``synth_media``
+(multimodal.py) encodes with them; the decoders are the independent
+reference that the encoder round-trip tests compare against.
 """
 
 from __future__ import annotations

@@ -12,13 +12,18 @@ gap-fill (reference: src/query/vector.rs) — is expressed as:
    the selector's first matching sample (vector.rs:29-45,86-97); the last
    instant is the largest grid point ``< max_ts + lookback`` (the buffer
    drains over trailing instants, vector.rs:74-107),
-3. a shuffle-friendly **serving-instant explode**: each sample serves the
-   grid instants ``t`` with ``ts ≤ t < ts + lookback``; fan-out is
-   ``ceil(lookback/interval)`` rows (= 1 for pq's default lookback ==
-   interval). This replaces an O(grid × samples) range join with a
-   map-side explode + hash aggregation, which scales linearly and
-   partitions by (instant, series) — no skew pile-up on hot series at
-   100 TB (hot *instants* are bounded by series cardinality per tick).
+3. one **range-window core** for pq's single window rule (grid instant
+   ``t`` sees the samples with ``t − range < ts ≤ t``): ``_serve_explode``
+   copies each sample to the ``ceil(range/interval)`` instants it serves
+   (= 1 for pq's default lookback == interval) — a map-side explode + hash
+   aggregation partitioned by (instant, series) in place of an O(grid ×
+   samples) range join, with no skew pile-up on hot series. Above
+   ``FANOUT_SWITCH`` steps per window (``_fans_out``), instant selectors
+   and selector-fed over-time functions instead window over
+   ``_block_carry`` (samples ∪ a series × instant skeleton, partitioned by
+   (series, ts div range)); ``_at_fixed`` serves ``@``-pinned windows.
+   Over-time values come from one table, ``_over_time_val``, grouped or
+   windowed; first/last picks order by the packed ``okey_expr``.
 
 Star-schema discipline (see frames.py): every combinator operates on the
 narrow fact relation keyed by the 64-bit ``skey``; label maps and signature
@@ -42,7 +47,7 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..errors import MatchingError, PqError
 from ..query.ast import (
@@ -124,6 +129,19 @@ def sig_expr(labels: Column) -> Column:
         ),
         "",
     )
+
+
+def okey_expr() -> Column:
+    """Packed ``(ts, seq)`` ordering key ``_okey = ts·2^21 + (seq mod 2^21)``.
+
+    First/last picks (``min_by``/``max_by``) over a LONG key stay in
+    HashAggregate, where a struct key would force SortAggregate. Ties only
+    wrap at seq deltas of 2^21 within one millisecond of one series, and
+    the product wraps int64 at ts >= 2^42 ms (~year 2109) — both out of
+    contract for log timestamps (same envelope as the reference's i64-ms
+    model; see COVERAGE.md)."""
+    b = F.lit(1 << 21)
+    return (F.col("ts") * b + F.pmod(F.col("seq"), b)).alias("_okey")
 
 
 _PAIR_SEP = "\xfe"
@@ -466,10 +484,11 @@ class Planner:
 
     def _plan_selector(self, sel: VectorSelector):
         ctx = self.ctx
-        interval = ctx.interval_ms
         # a range selector's duration overrides the lookback (vector.rs:29-32)
         lookback = sel.duration_ms if sel.duration_ms is not None else ctx.lookback_ms
         matched, params, grid, sel_dim = self._selector_parts(sel, lookback)
+        skey = F.xxhash64(sig_expr(F.col("labels")))
+        is_instant = sel.duration_ms is None
 
         if getattr(sel, "at_ms", None) is not None:
             # extension (PromQL `@` modifier): the selector window is
@@ -480,37 +499,74 @@ class Planner:
             # the shifted stream is the original window at T − offset.
             if not ctx.extensions:
                 raise PqError("@ modifier is not implemented")
-            return self._at_fixed(sel, matched, grid, sel_dim, lookback)
-
-        # strategy switch: the serving-instant explode multiplies rows by
-        # ceil(lookback/interval) pre-shuffle — above FANOUT_SWITCH the
-        # skeleton/window plan is cheaper (see _instant_window_strategy)
-        if (
-            sel.duration_ms is None
-            and math.ceil(lookback / interval) > self.FANOUT_SWITCH
-        ):
-            facts = self._instant_window_strategy(
-                matched, grid, sel_dim, interval, lookback
+            facts = self._at_fixed(
+                matched, grid, int(sel.at_ms), lookback, skey, latest=is_instant
             )
-            return VectorFrame(grid, facts, sel_dim)
+        elif is_instant and self._fans_out(lookback):
+            # running last over the block-carried samples: O(1) per row,
+            # where a sliding max_by would re-scan its frame for every row.
+            # Samples sort before a skeleton row at the same ms (they are
+            # visible at t), same-ms samples by _okey (latest seq wins).
+            w = (
+                Window.partitionBy("skey", "_blk")
+                .orderBy("ts", "_isinst", "_okey")
+                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            )
+            carried = self._block_carry(matched, grid, sel_dim, lookback).select(
+                "skey",
+                "ts",
+                "_isinst",
+                F.last("value", ignorenulls=True).over(w).alias("_lv"),
+                F.last(
+                    F.when(F.col("_isinst") == 0, F.col("ts")), ignorenulls=True
+                ).over(w).alias("_lts"),
+            )
+            facts = carried.filter(
+                (F.col("_isinst") == 1)
+                & F.col("_lts").isNotNull()
+                & (F.col("_lts") > F.col("ts") - F.lit(lookback))
+            ).select(F.col("ts").alias("instant"), "skey", F.col("_lv").alias("value"))
+        else:
+            facts = self._serve_explode(matched, params, lookback, skey)
+            if is_instant:
+                # instant vector: latest sample per series in the lookback window
+                facts = facts.groupBy("instant", "skey").agg(
+                    F.max_by("value", "_okey").alias("value"),
+                )
 
-        j = matched.crossJoin(F.broadcast(params.filter(F.col("_kend").isNotNull())))
+        return (VectorFrame if is_instant else RangeFrame)(grid, facts, sel_dim)
+
+    # -- the range-window core (module docstring, item 3) ------------------------
+
+    # explode fan-out above this, the block-carry window wins: the explode
+    # multiplies every sample by ceil(range/interval) rows BEFORE the
+    # shuffle, while the window plan moves each sample twice plus
+    # (series × instants) skeleton rows exactly once (break-even: PLANS.md §7)
+    FANOUT_SWITCH = 16
+
+    def _fans_out(self, range_ms: int) -> bool:
+        """True when a window spans more grid steps than FANOUT_SWITCH."""
+        return math.ceil(range_ms / self.ctx.interval_ms) > self.FANOUT_SWITCH
+
+    def _serve_explode(
+        self, src: DataFrame, params: DataFrame, lookback: int, skey: Column,
+    ) -> DataFrame:
+        """Serving-instant explode: each sample of ``src`` [ts, seq, value]
+        serves the grid instants ``t = _t0 + k·interval`` with
+        ``ts ≤ t < ts + lookback``, giving range facts
+        [instant, skey, value, ts, seq, _okey].
+
+        Few Dataset ops on purpose: every transformation re-analyzes the
+        whole subtree on the driver (eager per-op analysis), so the serve
+        projection explodes the ALREADY-SHIFTED instants directly."""
+        interval = self.ctx.interval_ms
+        j = src.crossJoin(F.broadcast(params.filter(F.col("_kend").isNotNull())))
         k0 = F.greatest(F.lit(0).cast("long"), _ceildiv(F.col("ts") - F.col("_t0"), interval))
         k1 = F.least(
             F.col("_kend"),
             _floordiv(F.col("ts") + F.lit(lookback - 1) - F.col("_t0"), interval),
         )
-        # packed (ts, seq) ordering key keeps the gap-fill agg in
-        # HashAggregate (struct keys force SortAggregate); ties only wrap at
-        # seq deltas of 2^21 within one millisecond of one series, and the
-        # ts*2^21 product wraps int64 at ts >= 2^42 ms (~year 2109) — both
-        # out of contract for log timestamps (same envelope as the
-        # reference's i64-ms model; see COVERAGE.md)
-        okey = (F.col("ts") * F.lit(1 << 21) + F.pmod(F.col("seq"), F.lit(1 << 21))).alias("_okey")
-        # few Dataset ops on purpose: every transformation re-analyzes the
-        # whole subtree on the driver (eager per-op analysis), so the
-        # serve projection explodes the ALREADY-SHIFTED instants directly
-        served = (
+        return (
             j.select("*", k0.alias("_k0"), k1.alias("_k1"))
             .filter(F.col("_k1") >= F.col("_k0"))
             .select(
@@ -520,123 +576,72 @@ class Planner:
                         lambda k: F.col("_t0") + k * F.lit(interval),
                     )
                 ).alias("instant"),
-                F.xxhash64(sig_expr(F.col("labels"))).alias("skey"),
+                skey.alias("skey"),
                 "value",
                 "ts",
                 "seq",
-                okey,
+                okey_expr(),
             )
         )
 
-        if sel.duration_ms is None:
-            # instant vector: latest sample per series in the lookback window
-            facts = served.groupBy("instant", "skey").agg(
-                F.max_by("value", "_okey").alias("value"),
-            )
-            return VectorFrame(grid, facts, sel_dim)
-
-        return RangeFrame(grid, served, sel_dim)
-
+    @staticmethod
     def _at_fixed(
-        self, sel: VectorSelector, matched: DataFrame, grid: DataFrame,
-        sel_dim: DataFrame, lookback: int,
-    ):
+        src: DataFrame, grid: DataFrame, t_at: int, lookback: int,
+        skey: Column, latest: bool = False,
+    ) -> DataFrame:
         """Fixed-instant (`@`) evaluation: one window (T−lookback, T] over
-        the matched samples, replicated to every grid instant.
+        ``src``, replicated to every grid instant — range facts, or with
+        ``latest`` the latest sample per series (instant facts).
 
         Scale shape: the fixed-window aggregate is series-dim-sized (one
         row per series for instants, window-point-bounded for ranges), so
         it BROADCASTS against the grid — a BroadcastNestedLoopJoin over
         grid × dim rows, never a data-sized cartesian."""
-        t_at = int(sel.at_ms)
-        okey = (
-            F.col("ts") * F.lit(1 << 21) + F.pmod(F.col("seq"), F.lit(1 << 21))
-        ).alias("_okey")
-        fixed = matched.filter(
+        fixed = src.filter(
             (F.col("ts") > F.lit(t_at - lookback)) & (F.col("ts") <= F.lit(t_at))
-        ).select(
-            F.xxhash64(sig_expr(F.col("labels"))).alias("skey"),
-            "value", "ts", "seq", okey,
-        )
-        if sel.duration_ms is None:
-            latest = fixed.groupBy("skey").agg(
+        ).select(skey.alias("skey"), "value", "ts", "seq", okey_expr())
+        if latest:
+            fixed = fixed.groupBy("skey").agg(
                 F.max_by("value", "_okey").alias("value")
             )
-            facts = grid.crossJoin(F.broadcast(latest)).select(
-                "instant", "skey", "value"
-            )
-            return VectorFrame(grid, facts, sel_dim)
-        facts = grid.crossJoin(F.broadcast(fixed)).select(
-            "instant", "skey", "value", "ts", "seq", "_okey"
-        )
-        return RangeFrame(grid, facts, sel_dim)
+        return grid.crossJoin(F.broadcast(fixed)).select("instant", *fixed.columns)
 
-    # explode fan-out above this, the skeleton/window strategy wins: the
-    # explode multiplies every sample by ceil(lookback/interval) rows BEFORE
-    # the shuffle, while the window plan moves samples + (series × instants)
-    # rows exactly once
-    FANOUT_SWITCH = 16
-
-    def _instant_window_strategy(
-        self, matched: DataFrame, grid: DataFrame,
-        sel_dim: DataFrame, interval: int, lookback: int,
+    @staticmethod
+    def _block_carry(
+        matched: DataFrame, grid: DataFrame, sel_dim: DataFrame, lookback: int
     ) -> DataFrame:
-        """High-fanout instant vectors (lookback ≫ interval): union the
-        samples with a (series × grid-instant) skeleton, carry the latest
-        sample per series with a last-value window, keep skeleton rows
-        whose source sample is still fresh. One shuffle keyed by skey; the
-        per-series sort replaces the explode's ceil(lookback/interval)×
-        row multiplication.
+        """Input of the per-series window strategies: the samples
+        (``_isinst`` = 0) unioned with a (series × grid-instant) skeleton
+        (``_isinst`` = 1, null value/_okey), as [skey, ts, _okey, value,
+        _isinst, _blk]. One shuffle keyed by (skey, _blk) replaces the
+        explode's ceil(range/interval)× row multiplication.
 
-        Skew immunity: the window partitions by (skey, time-block) with
-        block width = lookback. A carried value at instant t only survives
-        the freshness filter if its source sample is within ``lookback``
-        behind, i.e. in t's block or the one before — so each sample is
-        replicated into its own block and the next (fan-out exactly 2,
-        mirroring the Gorilla super-block boundary carry), and a
-        pathologically hot series shards across ceil(span/lookback) tasks
-        instead of serializing on one."""
-        from pyspark.sql import Window
-
-        blk = _floordiv(F.col("ts"), lookback)
+        Skew immunity: ``_blk = ts div lookback``. A window ending in block
+        k reaches back at most ``lookback − 1`` ms — into block k−1 at the
+        furthest — so each sample is carried into its own block and the
+        next (fan-out exactly 2, mirroring the Gorilla super-block boundary
+        carry), and a pathologically hot series shards across
+        ceil(span/lookback) tasks instead of serializing on one."""
         pts = matched.select(
             F.xxhash64(sig_expr(F.col("labels"))).alias("skey"),
             "ts",
-            F.pmod(F.col("seq"), F.lit(1 << 21)).alias("_seq"),
+            okey_expr(),
             "value",
             F.lit(0).alias("_isinst"),
         )
-        # native copy in its own block + boundary carry into the next
-        pts = pts.withColumn("_blk", blk).unionByName(
-            pts.withColumn("_blk", blk + F.lit(1))
-        )
+        blk = _floordiv(F.col("ts"), lookback)
         skeleton = grid.crossJoin(F.broadcast(sel_dim.select("skey"))).select(
             "skey",
             F.col("instant").alias("ts"),
-            F.lit(None).cast("long").alias("_seq"),
+            F.lit(None).cast("long").alias("_okey"),
             F.lit(None).cast("double").alias("value"),
             F.lit(1).alias("_isinst"),
-        ).withColumn("_blk", _floordiv(F.col("ts"), lookback))
-        w = (
-            Window.partitionBy("skey", "_blk")
-            .orderBy("ts", "_isinst", "_seq")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        unioned = pts.unionByName(skeleton)
-        carried = unioned.select(
-            "skey",
-            "ts",
-            "_isinst",
-            F.last("value", ignorenulls=True).over(w).alias("_lv"),
-            F.last(
-                F.when(F.col("_isinst") == 0, F.col("ts")), ignorenulls=True
-            ).over(w).alias("_lts"),
+        return (
+            pts.withColumn("_blk", blk)
+            .unionByName(pts.withColumn("_blk", blk + F.lit(1)))
+            .unionByName(skeleton.withColumn("_blk", blk))
         )
-        return carried.filter(
-            (F.col("_isinst") == 1)
-            & F.col("_lts").isNotNull()
-            & (F.col("_lts") > F.col("ts") - F.lit(lookback))
-        ).select(F.col("ts").alias("instant"), "skey", F.col("_lv").alias("value"))
 
     # -- subqueries ------------------------------------------------------------
 
@@ -677,67 +682,26 @@ class Planner:
         if not isinstance(inner, VectorFrame):
             raise PqError("subquery expects an instant vector expression")
 
-        interval = self.ctx.interval_ms
         lookback = int(node.range_ms)
         # offset: shift the inner sample stream forward (selector
         # convention) — a window ending at t over the shifted stream equals
-        # the original window at t − offset
+        # the original window at t − offset. One inner sample per (series,
+        # instant): seq ≡ 0 in the packed ordering key.
         ts = F.col("instant") + F.lit(int(node.offset_ms))
         samples = inner.facts.select(
-            ts.cast("long").alias("ts"), "skey", "value"
+            ts.cast("long").alias("ts"), "skey", "value",
+            F.lit(0).cast("long").alias("seq"),
         )
         params, grid = self._grid_params(samples, lookback)
-
         if node.at_ms is not None:
-            # `expr[r:s] @ T`: the outer window is pinned to T; every grid
-            # instant sees the same inner points (same broadcast shape as
-            # the selector `@` — inner points in one window are bounded by
-            # series × ceil(range/step))
-            t_at = int(node.at_ms)
-            fixed = samples.filter(
-                (F.col("ts") > F.lit(t_at - lookback))
-                & (F.col("ts") <= F.lit(t_at))
-            ).select(
-                "skey", "value", "ts", F.lit(0).cast("long").alias("seq"),
-                (F.col("ts") * F.lit(1 << 21)).alias("_okey"),
+            # `expr[r:s] @ T`: the outer window is pinned to T; inner points
+            # in one window are bounded by series × ceil(range/step)
+            facts = self._at_fixed(
+                samples, grid, int(node.at_ms), lookback, F.col("skey")
             )
-            facts = grid.crossJoin(F.broadcast(fixed)).select(
-                "instant", "skey", "value", "ts", "seq", "_okey"
-            )
-            return RangeFrame(grid, facts, inner.dim, inner.checks)
-        j = samples.crossJoin(
-            F.broadcast(params.filter(F.col("_kend").isNotNull()))
-        )
-        k0 = F.greatest(
-            F.lit(0).cast("long"), _ceildiv(F.col("ts") - F.col("_t0"), interval)
-        )
-        k1 = F.least(
-            F.col("_kend"),
-            _floordiv(F.col("ts") + F.lit(lookback - 1) - F.col("_t0"), interval),
-        )
-        served = (
-            j.withColumn("_k0", k0)
-            .withColumn("_k1", k1)
-            .filter(F.col("_k1") >= F.col("_k0"))
-            .select(
-                F.explode(F.sequence("_k0", "_k1")).alias("_k"),
-                "_t0",
-                "skey",
-                "value",
-                "ts",
-            )
-            .select(
-                (F.col("_t0") + F.col("_k") * F.lit(interval)).alias("instant"),
-                "skey",
-                "value",
-                "ts",
-                F.lit(0).cast("long").alias("seq"),
-                # one inner sample per (series, instant): seq ≡ 0 in the
-                # packed ordering key
-                (F.col("ts") * F.lit(1 << 21)).alias("_okey"),
-            )
-        )
-        return RangeFrame(grid, served, inner.dim, inner.checks)
+        else:
+            facts = self._serve_explode(samples, params, lookback, F.col("skey"))
+        return RangeFrame(grid, facts, inner.dim, inner.checks)
 
     # -- unary -----------------------------------------------------------------
 
@@ -802,8 +766,6 @@ class Planner:
         # so fact-side aggregations order by a LONG — no strings in the
         # fact shuffle, min_by stays HashAggregate
         def _with_ordn(gm: DataFrame) -> DataFrame:
-            from pyspark.sql import Window
-
             w = Window.partitionBy("_gkey").orderBy("ord")
             return gm.withColumn("_ordn", F.row_number().over(w))
 
@@ -832,8 +794,6 @@ class Planner:
             return VectorFrame(inner.grid, facts, out_dim, inner.checks)
 
         if op in ("topk", "bottomk", "limitk"):
-            from pyspark.sql import Window
-
             k = max(int(node.argument), 0)
             f = inner.facts.join(
                 F.broadcast(_with_ordn(gmap).select("skey", "_gkey", "_ordn")), "skey"
@@ -976,43 +936,27 @@ class Planner:
 
     def _plan_function(self, node: FunctionCall):
         name = node.name
-        if name in AGG_OVER_TIME_FUNCS:
-            argnode = node.args[0]
-            if (
-                isinstance(argnode, VectorSelector)
-                and argnode.duration_ms is not None
-                and argnode.at_ms is None  # @-pinned windows take _at_fixed
-                and math.ceil(argnode.duration_ms / self.ctx.interval_ms)
-                > self.FANOUT_SWITCH
-            ):
-                # high window/interval ratio: fuse selector+function into a
-                # sliding-window plan instead of materializing each point
-                # ceil(range/interval) times (see _over_time_fused)
-                return self._over_time_fused(name, argnode)
-            arg = self.plan(argnode)
-            if not isinstance(arg, RangeFrame):
-                raise PqError(f"{name} expects a range vector")
-            return self._over_time(name, arg)
-        if self.ctx.extensions and name in EXTENSION_OVER_TIME_FUNCS:
-            arg = self.plan(node.args[0])
-            if not isinstance(arg, RangeFrame):
-                raise PqError(f"{name} expects a range vector")
-            return self._rate_family(name, arg)
-        if self.ctx.extensions and name in _STAT_OVER_TIME_FNS:
+        if name in AGG_OVER_TIME_FUNCS or (
+            self.ctx.extensions and name in _STAT_OVER_TIME_FNS
+        ):
             argnode = node.args[-1]
             q = float(node.args[0]) if name == "quantile_over_time" else None
             if (
                 isinstance(argnode, VectorSelector)
                 and argnode.duration_ms is not None
                 and argnode.at_ms is None  # @-pinned windows take _at_fixed
-                and math.ceil(argnode.duration_ms / self.ctx.interval_ms)
-                > self.FANOUT_SWITCH
+                and self._fans_out(argnode.duration_ms)
             ):
                 return self._over_time_fused(name, argnode, q)
             arg = self.plan(argnode)
             if not isinstance(arg, RangeFrame):
                 raise PqError(f"{name} expects a range vector")
             return self._over_time(name, arg, q)
+        if self.ctx.extensions and name in EXTENSION_OVER_TIME_FUNCS:
+            arg = self.plan(node.args[0])
+            if not isinstance(arg, RangeFrame):
+                raise PqError(f"{name} expects a range vector")
+            return self._rate_family(name, arg)
         if self.ctx.extensions and name in ("clamp", "clamp_max", "clamp_min"):
             arg = self.plan(node.args[0])
             if not isinstance(arg, VectorFrame):
@@ -1124,8 +1068,6 @@ class Planner:
         rows), so there is no skew surface; the group dim is rebuilt from
         the invertible sig2 on dim-sized rows (no label maps in
         aggregation buffers)."""
-        from pyspark.sql import Window
-
         nan = F.lit(float("nan"))
         inf = float("inf")
         out_labels = _labels_without(F.col("labels"), ["le"])
@@ -1339,42 +1281,67 @@ class Planner:
         )
 
     def _over_time(self, name: str, rf: RangeFrame, q: float | None = None) -> VectorFrame:
-        g = rf.facts.groupBy("instant", "skey")
-        if name == "count_over_time":
-            val = F.count("value").cast("double")
-        elif name == "sum_over_time":
-            val = F.sum("value")
-        elif name == "min_over_time":
-            val = F.min("value")
-        elif name == "max_over_time":
-            val = F.max("value")
-        elif name == "avg_over_time":
-            val = F.sum("value") / F.count("value")
-        elif name == "last_over_time":
-            # reference quirk: iterates the DESC-ordered window and takes
-            # .last() ⇒ the OLDEST point (function.rs:56 + vector.rs:235),
-            # diverging from Prometheus. Replicate with min_by over the
-            # packed ordering key (HashAggregate-friendly).
-            val = F.min_by("value", "_okey")
-        elif name in _STAT_OVER_TIME_FNS:
-            val = self._stat_over_time_val(name, q)
-        else:  # pragma: no cover
-            raise PqError(f"unknown over-time function {name}")
-
-        facts = g.agg(val.alias("value"))
+        facts = rf.facts.groupBy("instant", "skey").agg(
+            self._over_time_val(name, q).alias("value")
+        )
         return VectorFrame(rf.grid, facts, self._dropname_dim(rf.dim), rf.checks)
 
+    def _over_time_fused(
+        self, name: str, sel: VectorSelector, q: float | None = None
+    ) -> VectorFrame:
+        """High-fanout over-time functions (range ≫ interval): instead of
+        exploding every sample into ceil(range/interval) window copies,
+        compute the function as a per-series SLIDING RANGE window over the
+        block-carried samples and skeleton (see _block_carry). Skeleton
+        rows whose window holds no sample emit nothing. Equivalence with
+        the explode path, incl. the last_over_time oldest-point quirk, is
+        pinned by a force-both-paths test."""
+        lookback = sel.duration_ms
+        matched, _, grid, sel_dim = self._selector_parts(sel, lookback)
+        w = (
+            Window.partitionBy("skey", "_blk")
+            .orderBy("ts")
+            .rangeBetween(-(lookback - 1), 0)
+        )
+        carried = (
+            self._block_carry(matched, grid, sel_dim, lookback)
+            .withColumn("_val", self._over_time_val(name, q, w))
+            .withColumn("_n", F.count("value").over(w))
+        )
+        facts = carried.filter(
+            (F.col("_isinst") == 1) & (F.col("_n") >= 1)
+        ).select(F.col("ts").alias("instant"), "skey", F.col("_val").alias("value"))
+        return VectorFrame(grid, facts, self._dropname_dim(sel_dim))
+
     @staticmethod
-    def _stat_over_time_val(name: str, q: float | None, w=None):
-        """Shared value expression for the statistical over-time
-        extensions, grouped (w=None) or windowed. Population moments
-        (Prometheus uses stddev/stdvar over the window population);
+    def _over_time_val(name: str, q: float | None = None, w=None) -> Column:
+        """Value expression of an over-time function, grouped per (instant,
+        series) (w=None) or as a sliding window ``w`` over the block-carried
+        rows, whose skeleton rows carry null values and _okey that every
+        aggregate below ignores. Statistical extensions use population
+        moments (Prometheus uses stddev/stdvar over the window population);
         quantile is the exact interpolated percentile (Prometheus's
         linear-interpolation quantile == SQL percentile_cont), with the
         Prometheus out-of-range rule φ<0 → −Inf, φ>1 → +Inf."""
         def over(c):
             return c.over(w) if w is not None else c
 
+        if name == "count_over_time":
+            return over(F.count("value")).cast("double")
+        if name == "sum_over_time":
+            return over(F.sum("value"))
+        if name == "min_over_time":
+            return over(F.min("value"))
+        if name == "max_over_time":
+            return over(F.max("value"))
+        if name == "avg_over_time":
+            return over(F.sum("value")) / over(F.count("value"))
+        if name == "last_over_time":
+            # reference quirk: iterates the DESC-ordered window and takes
+            # .last() ⇒ the OLDEST point (function.rs:56 + vector.rs:235),
+            # diverging from Prometheus. Replicate with min_by over the
+            # packed ordering key (HashAggregate-friendly).
+            return over(F.min_by("value", "_okey"))
         if name == "present_over_time":
             # 1 for any non-empty window; empty windows never reach here
             # (grouped: group requires a point; fused: the _n >= 1 filter)
@@ -1410,88 +1377,17 @@ class Planner:
                 ),
             )
             return F.element_at(F.element_at(bound, 1), 1)
+        if name != "quantile_over_time":  # pragma: no cover
+            raise PqError(f"unknown over-time function {name}")
         # NaN first: it passes both range guards (NaN<0 and NaN>1 are
         # false) but Spark's percentile rejects it — Prometheus says NaN
-        if q is not None and math.isnan(q):
+        if math.isnan(q):
             return F.lit(float("nan"))
-        if q is not None and q < 0:
+        if q < 0:
             return F.lit(float("-inf"))
-        if q is not None and q > 1:
+        if q > 1:
             return F.lit(float("inf"))
         return over(F.percentile("value", F.lit(q)))
-
-    def _over_time_fused(
-        self, name: str, sel: VectorSelector, q: float | None = None
-    ) -> VectorFrame:
-        """High-fanout over-time functions (range ≫ interval): instead of
-        exploding every sample into ceil(range/interval) window copies,
-        union the samples with a (series × grid-instant) skeleton and
-        compute the function as a per-series SLIDING RANGE window.
-
-        Skew immunity: partitioned by (skey, time-block) with block width
-        = range. A window ending in block k reaches back at most
-        ``range − 1`` ms — into block k−1 at the furthest — so each sample
-        is replicated into its own block and the next (fan-out exactly 2 ≪
-        FANOUT_SWITCH, the explode path's break-even) and a hot series
-        shards across ceil(span/range) tasks. Equivalence incl. the
-        last_over_time oldest-point quirk is pinned by a force-both-paths
-        test."""
-        from pyspark.sql import Window
-
-        lookback = sel.duration_ms
-        matched, params, grid, sel_dim = self._selector_parts(sel, lookback)
-        okey = (
-            F.col("ts") * F.lit(1 << 21) + F.pmod(F.col("seq"), F.lit(1 << 21))
-        )
-        blk = _floordiv(F.col("ts"), lookback)
-        pts = matched.select(
-            F.xxhash64(sig_expr(F.col("labels"))).alias("skey"),
-            "ts",
-            okey.alias("_okey"),
-            "value",
-        )
-        pts = pts.withColumn("_blk", blk).unionByName(
-            pts.withColumn("_blk", blk + F.lit(1))
-        )
-        skeleton = grid.crossJoin(F.broadcast(sel_dim.select("skey"))).select(
-            "skey",
-            F.col("instant").alias("ts"),
-            F.lit(None).cast("long").alias("_okey"),
-            F.lit(None).cast("double").alias("value"),
-        ).withColumn("_blk", _floordiv(F.col("ts"), lookback))
-        w = (
-            Window.partitionBy("skey", "_blk")
-            .orderBy("ts")
-            .rangeBetween(-(lookback - 1), 0)
-        )
-        if name == "count_over_time":
-            val = F.count("value").over(w).cast("double")
-        elif name == "sum_over_time":
-            val = F.sum("value").over(w)
-        elif name == "min_over_time":
-            val = F.min("value").over(w)
-        elif name == "max_over_time":
-            val = F.max("value").over(w)
-        elif name == "avg_over_time":
-            val = F.sum("value").over(w) / F.count("value").over(w)
-        elif name == "last_over_time":
-            # OLDEST point (reference quirk); min_by ignores the skeleton
-            # rows' null ordering keys
-            val = F.min_by("value", "_okey").over(w)
-        elif name in _STAT_OVER_TIME_FNS:
-            val = self._stat_over_time_val(name, q, w)
-        else:  # pragma: no cover
-            raise PqError(f"unknown over-time function {name}")
-
-        carried = (
-            pts.unionByName(skeleton.withColumn("_isinst", F.lit(1)), allowMissingColumns=True)
-            .withColumn("_val", val)
-            .withColumn("_n", F.count("value").over(w))
-        )
-        facts = carried.filter(
-            (F.col("_isinst") == 1) & (F.col("_n") >= 1)
-        ).select(F.col("ts").alias("instant"), "skey", F.col("_val").alias("value"))
-        return VectorFrame(grid, facts, self._dropname_dim(sel_dim))
 
     def _rate_family(self, name: str, rf: RangeFrame) -> VectorFrame:
         """Extension (NOT in the reference engine): PromQL-style rate family

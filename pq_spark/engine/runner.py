@@ -8,6 +8,7 @@ since/until option semantics (src/query/evaluator.rs:26-52).
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,7 +37,10 @@ ENGINE_CONFS = {
 }
 
 
-_CONFIGURED_SESSIONS: set[int] = set()
+# sessions already configured, held weakly: a stopped session leaves the
+# set when it is collected, so a new session never inherits its entry (an
+# id() key could be reused by one)
+_CONFIGURED_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 
 
 def configure_session(spark: SparkSession) -> None:
@@ -45,9 +49,8 @@ def configure_session(spark: SparkSession) -> None:
     # this hundreds of times per bench run on one session). The two
     # result-critical confs (IEEE arithmetic, UTC grid math) are still
     # probed so a harness that flips them mid-session gets re-configured.
-    key = id(spark._jsparkSession)
     if (
-        key in _CONFIGURED_SESSIONS
+        spark in _CONFIGURED_SESSIONS
         and spark.conf.get("spark.sql.ansi.enabled", "true") == "false"
         and spark.conf.get("spark.sql.session.timeZone", "") == "UTC"
     ):
@@ -55,7 +58,7 @@ def configure_session(spark: SparkSession) -> None:
     for k, v in ENGINE_CONFS.items():
         spark.conf.set(k, v)
     _disable_dataframe_debugging(spark)
-    _CONFIGURED_SESSIONS.add(key)
+    _CONFIGURED_SESSIONS.add(spark)
 
 
 def _disable_dataframe_debugging(spark: SparkSession) -> None:
@@ -79,6 +82,9 @@ def _disable_dataframe_debugging(spark: SparkSession) -> None:
     try:
         import pyspark.errors.utils as _peu
 
+        # process-wide: this module-level cache is shared by every session
+        # in the interpreter, so the first configured session turns the
+        # debug capture off for all of them
         _peu._enable_debugging_cache = False
     except Exception:
         pass

@@ -99,6 +99,23 @@ class TierStore:
     # tier row widths) — commit() takes max(size width, balance width)
     MIN_ROWS_PER_FILE = 65536
 
+    def _writer_width(self, rows: int, par: int) -> int:
+        """Files a partition of ``rows`` rows is written as, for both
+        :meth:`commit` and :meth:`compact` (so compaction never rewrites a
+        layout that commit just wrote). Width = max(size-derived,
+        balance-derived), capped at the session parallelism ``par``: size
+        wants ceil(rows/target) files of ~target rows; balance wants a
+        partition with enough rows to keep the writer cores busy
+        (rows // MIN_ROWS_PER_FILE writers, never making files below the
+        parquet floor). A pure size rule serialized each date onto ONE
+        writer below target rows — measured on the 1->4-executor scaling
+        pair as a multi-second 4-exec-only tax with zero 1-exec effect."""
+        return max(
+            1,
+            min(par, -(-rows // self.target_rows_per_file)),
+            min(par, rows // self.MIN_ROWS_PER_FILE),
+        )
+
     # -- manifest I/O --------------------------------------------------------
 
     def _lineage_dir(self, table: str) -> str:
@@ -362,21 +379,9 @@ class TierStore:
             # split width PER stale partition, from its exact row count:
             # a global max-based width would shatter a small date committed
             # alongside a big one into max-width tiny files (the round-6
-            # small-tier tax, reappearing WITHIN a mixed-size commit).
-            # Width = max(size-derived, balance-derived): size wants
-            # ceil(rows/target) files of ~target rows; balance wants a
-            # partition with enough rows to keep the writer cores busy
-            # (rows // MIN_ROWS_PER_FILE writers, never making files
-            # below the parquet floor). A pure size rule serialized each
-            # date onto ONE writer below target rows — measured on the
-            # 1->4-executor scaling pair as a multi-second 4-exec-only
-            # tax with zero 1-exec effect.
+            # small-tier tax, reappearing WITHIN a mixed-size commit)
             k_by_part = {
-                str(p): max(
-                    1,
-                    min(par, -(-int(fps[p]["rows"]) // self.target_rows_per_file)),
-                    min(par, int(fps[p]["rows"]) // self.MIN_ROWS_PER_FILE),
-                )
+                str(p): self._writer_width(int(fps[p]["rows"]), par)
                 for p in stale
             }
             atomic = [
@@ -561,9 +566,9 @@ class TierStore:
     def compact(self, spark, table: str, slack_files: int = 0) -> dict:
         """Small-file compaction — the ``rewrite_data_files`` maintenance
         action of an Iceberg table, expressed on the manifest store: every
-        live partition whose parquet file count exceeds its row-derived
-        writer width (``ceil(rows / target_rows_per_file)``, capped at the
-        session parallelism) by more than ``slack_files`` is rewritten into
+        live partition whose parquet file count exceeds the writer width
+        :meth:`commit` gives its row count (:meth:`_writer_width`) by more
+        than ``slack_files`` is rewritten into
         a fresh immutable ``data/<cid>/`` directory at the correct width,
         and a new snapshot is published.
 
@@ -585,7 +590,7 @@ class TierStore:
         for part, rel in sorted(parts.items()):
             m = self.read_manifest(table, part) or {}
             rows = int((m.get("fingerprint") or {}).get("rows", 0))
-            want = max(1, min(par, -(-rows // self.target_rows_per_file)))
+            want = self._writer_width(rows, par)
             have = len(glob.glob(os.path.join(root, rel, "*.parquet")))
             if have > want + int(slack_files):
                 frag[part] = (rel, want)

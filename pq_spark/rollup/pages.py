@@ -160,18 +160,12 @@ def page_samples(pages: DataFrame) -> DataFrame:
     return samples_from_table(_page_enriched(pages), **_PAGE_TABLE_ARGS)
 
 
-def page_series_dim(pages: DataFrame) -> DataFrame:
-    """Series dim of ``page_samples(pages)`` via the label-space fast path
-    (one narrow aggregate over page rows; equals
-    ``series_dim(page_samples(pages))`` by the ``series_dim_for_table``
-    contract — pinned in tests/test_rollup.py)."""
-    return page_series_dim_from_enriched(_page_enriched(pages))
-
-
 def page_series_dim_from_enriched(enriched: DataFrame) -> DataFrame:
-    """Same dim, built from an already-enriched (possibly persisted)
-    projection so the pipeline's fused-verify cache is reused instead of
-    re-scanning the page table."""
+    """Series dim of ``page_samples`` via the label-space fast path (one
+    narrow aggregate over page rows; equals ``series_dim(page_samples(...))``
+    by the ``series_dim_for_table`` contract), built from an
+    already-enriched (possibly persisted) projection so the pipeline's
+    fused-verify cache is reused instead of re-scanning the page table."""
     from ..engine.ingest import series_dim_for_table
     from .tiers import series_dim_from_labelspace
 

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..engine.planner import sig_expr
+from ..engine.planner import okey_expr, sig_expr
 
 TIER_MS = {"1m": 60_000, "1h": 3_600_000, "1d": 86_400_000}
 
@@ -122,20 +122,13 @@ def tier_partials(
     skey_col = (
         F.col("skey") if narrow_input else series_key(sig_expr(F.col("labels")))
     )
-    # packed (ts, seq) ordering key: min_by/max_by over a LONG keeps the
-    # aggregation in HashAggregate (a struct key forces SortAggregate — a
-    # per-partition sort). Tie caveat: two samples of one series in the SAME
-    # millisecond whose seqs differ by a multiple of 2^21 would tie-break
-    # arbitrarily; all drivers keep seq (event_id / line_no) far below 2^21
-    # per ms.
-    _B = F.lit(1 << 21)
     base = samples.select(
         _bucket(F.col("ts"), tier_ms).alias("bucket_ts"),
         skey_col.alias("skey"),
         "ts",
         "seq",
         "value",
-        (F.col("ts") * _B + F.pmod(F.col("seq"), _B)).alias("_okey"),
+        okey_expr(),
     )
 
     def aggs(g):
@@ -538,13 +531,6 @@ def write_bucketed_tier(
         .format("parquet")
         .saveAsTable(table_name)
     )
-
-
-def read_bucketed_tier(spark, table_name: str) -> DataFrame:
-    """Read a bucketed tier WITH its bucketing metadata (must go through
-    the catalog — ``spark.read.parquet(path)`` would lose the bucket
-    spec and re-shuffle)."""
-    return spark.table(table_name)
 
 
 def gapfill(

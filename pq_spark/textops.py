@@ -1567,27 +1567,6 @@ def host_stats(
     )
 
 
-def host_spam_filter(
-    docs: DataFrame,
-    max_dup_rate: float = 0.5,
-    min_mean_tokens: float = 5.0,
-    url_col: str = "url",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Drop every document served by a spam-verdict host (see
-    ``host_stats``). The stats table is host-cardinality-sized, so the
-    verdict comes back as a broadcast left-semi join — the corpus
-    never shuffles."""
-    ok = host_stats(
-        docs, max_dup_rate, min_mean_tokens, url_col, text_col, id_col
-    ).where(~F.col("spam")).select("host")
-    host = F.regexp_extract(F.col(url_col), r"^https?://([^/]+)/", 1)
-    return docs.withColumn("_host", host).join(
-        F.broadcast(ok.withColumnRenamed("host", "_host")), "_host", "left_semi"
-    ).drop("_host")
-
-
 # ---------------------------------------------------------------------------
 # training-pipeline operators: sampling, cleaning, PII redaction,
 # contamination screening, shard assignment

@@ -231,3 +231,32 @@ def test_module_main_stdin(spark):
 
     assert main(["p", "--since", "2021-01-01 00:00:05",
                  "--until", "2021-01-01 00:00:01"]) == 2
+
+
+def test_configure_session_memo_survives_id_collision():
+    """The configure_session memo is keyed on the session object, not on
+    an id() a later session can reuse: a second stand-in session whose JVM
+    handle has the same id as the first's still gets every engine conf."""
+    from pq_spark.engine import runner
+
+    class Conf(dict):
+        def get(self, k, default=None):
+            return super().get(k, default)
+
+        def set(self, k, v):
+            self[k] = v
+
+    class Session:
+        def __init__(self, jsession):
+            self._jsparkSession = jsession
+            # a harness-built session: the two probed confs already hold
+            self.conf = Conf({"spark.sql.ansi.enabled": "false",
+                              "spark.sql.session.timeZone": "UTC"})
+
+    handle = object()
+    a, b = Session(handle), Session(handle)
+    assert id(a._jsparkSession) == id(b._jsparkSession)
+    runner.configure_session(a)
+    runner.configure_session(b)
+    for s in (a, b):
+        assert {k: s.conf.get(k) for k in runner.ENGINE_CONFS} == runner.ENGINE_CONFS

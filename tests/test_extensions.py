@@ -41,6 +41,17 @@ def _cells_many(eng, sdf, queries, **kw):
         return dict(ex.map(one, queries))
 
 
+def _both_paths(monkeypatch, run):
+    """``run()`` on the default plan, then again with the fan-out switch
+    raised so every range takes the serve-explode path."""
+    from pq_spark.engine.planner import Planner
+
+    default = run()
+    with monkeypatch.context() as m:
+        m.setattr(Planner, "FANOUT_SWITCH", 10**9)
+        return default, run()
+
+
 def test_reference_parity_rejects_extensions(spark, samples):
     eng = PqEngine(spark, extensions=False)
     for q in ["quantile(0.5, m)", "stddev(m)", "clamp(m, 0, 2)",
@@ -184,7 +195,7 @@ def test_vector_requires_extensions(spark):
         assert "not implemented" in str(e)
 
 
-def test_high_fanout_window_strategy_equivalence(spark):
+def test_high_fanout_window_strategy_equivalence(spark, monkeypatch):
     """lookback >> interval triggers the skeleton/window plan; its output
     must equal the serving-instant explode's exactly (incl. same-ms seq
     tie-breaks and staleness cut-offs)."""
@@ -211,13 +222,7 @@ def test_high_fanout_window_strategy_equivalence(spark):
         )
 
     assert 60_000 // 1_000 > Planner.FANOUT_SWITCH
-    window_out = run()
-    old = Planner.FANOUT_SWITCH
-    try:
-        Planner.FANOUT_SWITCH = 10_000  # force the explode path
-        explode_out = run()
-    finally:
-        Planner.FANOUT_SWITCH = old
+    window_out, explode_out = _both_paths(monkeypatch, run)
     assert window_out == explode_out
     assert len(window_out) > 0
     # spot semantics: at instant 1999 series a carries value 2.0 (seq 2
@@ -228,10 +233,11 @@ def test_high_fanout_window_strategy_equivalence(spark):
     assert (61_999, a_sig) not in d
 
 
-def test_high_fanout_over_time_fused_equivalence(spark):
+def test_high_fanout_over_time_fused_equivalence(spark, monkeypatch):
     """range >> interval triggers the fused sliding-window over-time plan;
     output must equal the explode path's exactly for every function, incl.
-    the last_over_time oldest-point quirk with same-ms seq ties."""
+    the last_over_time oldest-point quirk with same-ms seq ties, the
+    statistical extensions and an offset window."""
     from pq_spark.engine.planner import Planner
     from pq_spark.engine.runner import PqEngine
 
@@ -245,36 +251,47 @@ def test_high_fanout_over_time_fused_equivalence(spark):
     samples = spark.createDataFrame(
         rows, "seq long, ts long, labels map<string,string>, name string, value double"
     )
-    eng = PqEngine(spark, strict=False)
-    fns = ["count_over_time", "sum_over_time", "min_over_time",
-           "max_over_time", "avg_over_time", "last_over_time"]
+    eng = PqEngine(spark, strict=False, extensions=True)
+    queries = [
+        f"{fn}(v[60s])"
+        for fn in ["count_over_time", "sum_over_time", "min_over_time",
+                   "max_over_time", "avg_over_time", "last_over_time",
+                   "stddev_over_time", "stdvar_over_time",
+                   "present_over_time"]
+    ] + ["quantile_over_time(0.5, v[60s])", "sum_over_time(v[60s] offset 30s)"]
 
-    def run(fn):
-        vf = eng.evaluate(f"{fn}(v[60s])", samples, interval_ms=1_000)
-        return fn, sorted(
+    def run(q):
+        vf = eng.evaluate(q, samples, interval_ms=1_000)
+        return q, sorted(
             (r["instant"], r["sig"], r["value"]) for r in vf.cells.collect()
         )
 
     from concurrent.futures import ThreadPoolExecutor
 
     # one concurrent batch per PLAN PATH (FANOUT_SWITCH is planner-global
-    # state, so the two paths can't interleave — but within a path the six
-    # functions are independent jobs)
+    # state, so the two paths can't interleave — but within a path the
+    # queries are independent jobs)
+    def run_all():
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            return dict(ex.map(run, queries))
+
     assert 60 > Planner.FANOUT_SWITCH
-    with ThreadPoolExecutor(max_workers=6) as ex:
-        fused = dict(ex.map(run, fns))
-    old = Planner.FANOUT_SWITCH
-    try:
-        Planner.FANOUT_SWITCH = 10_000  # force the explode path
-        with ThreadPoolExecutor(max_workers=6) as ex:
-            exploded = dict(ex.map(run, fns))
-    finally:
-        Planner.FANOUT_SWITCH = old
-    for fn in fns:
-        assert fused[fn] == exploded[fn] and len(fused[fn]) > 0, fn
+    fused, exploded = _both_paths(monkeypatch, run_all)
+    for q in queries:
+        if q.startswith(("stddev", "stdvar")):
+            # population moments accumulate in frame order on one path and
+            # in partial-merge order on the other: equal up to rounding
+            assert fused[q] and (
+                [r[:2] for r in fused[q]] == [r[:2] for r in exploded[q]]
+            ), q
+            assert [r[2] for r in fused[q]] == pytest.approx(
+                [r[2] for r in exploded[q]], rel=1e-12, abs=1e-12
+            ), q
+            continue
+        assert fused[q] == exploded[q] and len(fused[q]) > 0, q
 
 
-def test_hot_series_window_plans_shard_and_match(spark):
+def test_hot_series_window_plans_shard_and_match(spark, monkeypatch):
     """One pathologically hot series spanning many lookback-width blocks:
     the (skey, time-block) sharded window plans must (a) agree with the
     explode path exactly — boundary carry-in loses nothing — and (b)
@@ -284,7 +301,6 @@ def test_hot_series_window_plans_shard_and_match(spark):
 
     from pyspark.sql import functions as F
 
-    from pq_spark.engine.planner import Planner
     from pq_spark.engine.runner import PqEngine
 
     hot = spark.range(3_000).select(
@@ -307,18 +323,11 @@ def test_hot_series_window_plans_shard_and_match(spark):
                 (r["instant"], r["value"]) for r in vf.cells.collect()
             )
 
-        vf, window_out = run()
+        (vf, window_out), (_, explode_out) = _both_paths(monkeypatch, run)
         plan = vf.cells._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"))
         assert re.search(r"hashpartitioning\(skey#\d+L, _blk#\d+L", plan), q
-
-        old = Planner.FANOUT_SWITCH
-        try:
-            Planner.FANOUT_SWITCH = 10_000_000  # force the explode path
-            _, explode_out = run()
-        finally:
-            Planner.FANOUT_SWITCH = old
         assert window_out == explode_out and len(window_out) > 1_000, q
 
 
@@ -628,7 +637,7 @@ def test_at_modifier_fixed_instant(spark):
         PqEngine(spark, extensions=False).evaluate("m @ 3", sdf)
 
 
-def test_mad_over_time(spark):
+def test_mad_over_time(spark, monkeypatch):
     """median(|x − median(x)|), both medians linear-interpolated; explode
     and fused sliding-window paths agree exactly."""
     from pq_spark.engine.planner import Planner
@@ -663,13 +672,7 @@ def test_mad_over_time(spark):
                                    since_ms=1000, interval_ms=100))
 
     assert 40 > Planner.FANOUT_SWITCH
-    fused = run()
-    old = Planner.FANOUT_SWITCH
-    try:
-        Planner.FANOUT_SWITCH = 10_000
-        exploded = run()
-    finally:
-        Planner.FANOUT_SWITCH = old
+    fused, exploded = _both_paths(monkeypatch, run)
     assert fused == exploded and len(fused) > 0
 
 

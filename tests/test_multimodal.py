@@ -5,12 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pq_spark.codecs import decode_png, decode_wav, encode_png, encode_wav
-from pq_spark.multimodal import (
-    extract_features,
-    resize_images,
-    sample_frames,
-    synth_media,
-)
+from pq_spark.multimodal import synth_media
 
 
 # -- pure codec round-trips (no Spark) --------------------------------------
@@ -165,53 +160,10 @@ def test_wav_roundtrip():
 # -- Spark pipeline over the real formats -----------------------------------
 
 
-def test_media_features(spark):
-    media = synth_media(spark, 200).cache()
-    feats = extract_features(media)
-    rows = {r["media_id"]: r for r in feats.collect()}
-    assert len(rows) == 200
-    meta = {r["media_id"]: r for r in media.select("media_id", "kind", "meta").collect()}
-    for mid, r in rows.items():
-        m = meta[mid]
-        assert r["kind"] == m["kind"]
-        expected_payload = m["meta"]["width"] * m["meta"]["height"] * m["meta"]["frames"]
-        assert r["n_payload"] == expected_payload
-        if r["kind"] == "audio":
-            # decoded audio reports sample count, not pixel geometry
-            assert r["width"] == expected_payload
-        else:
-            assert r["width"] == m["meta"]["width"]
-        assert 0.0 <= r["mean_intensity"] <= 255.0
-
-
 def test_media_deterministic(spark):
-    a = extract_features(synth_media(spark, 50)).orderBy("media_id").collect()
-    b = extract_features(synth_media(spark, 50)).orderBy("media_id").collect()
+    a = synth_media(spark, 50).orderBy("media_id").collect()
+    b = synth_media(spark, 50).orderBy("media_id").collect()
     assert a == b
-
-
-def test_resize_and_frames(spark):
-    media = synth_media(spark, 200).cache()
-    thumbs = resize_images(media, 4, 4).collect()
-    n_images = media.filter(F.col("kind") == "image").count()
-    assert len(thumbs) == n_images
-    for t in thumbs:
-        img = decode_png(bytes(t["thumb"]))  # thumbnails are REAL PNGs
-        assert img.shape == (4, 4)
-
-    frames = sample_frames(media, every=2)
-    got = frames.collect()
-    by_media = {}
-    for r in got:
-        by_media.setdefault(r["media_id"], []).append(r)
-        assert decode_png(bytes(r["frame"])).size > 0  # standalone PNGs
-    vids = {
-        r["media_id"]: r["meta"]["frames"]
-        for r in media.filter(F.col("kind") == "video").select("media_id", "meta").collect()
-    }
-    assert set(by_media) == set(vids)
-    for mid, rs in by_media.items():
-        assert len(rs) == (vids[mid] + 1) // 2
 
 
 def test_codecs_reject_truncation_with_valueerror():
@@ -224,13 +176,6 @@ def test_codecs_reject_truncation_with_valueerror():
                       (wav, 14)]:
         with pytest.raises(ValueError):
             (decode_png if blob is png else decode_wav)(blob[:cut])
-
-
-def test_zero_frame_video_features(spark):
-    from pq_spark.multimodal import _decode_any, _make_video
-
-    kind, w, h, frames, payload = _decode_any(_make_video([], 5, 4))
-    assert (kind, w, h, frames, len(payload)) == ("video", 5, 4, 0, 0)
 
 
 def test_codec_fuzz_roundtrip_and_rejection():

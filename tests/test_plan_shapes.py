@@ -33,6 +33,19 @@ def _formatted_plan(spark, df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
+def _generators(plan: str) -> list[str]:
+    """Generator expressions of the plan's Generate nodes. A formatted plan
+    prints each on the node's ``Arguments:`` line, not on its ``(n)
+    Generate`` header."""
+    return re.findall(
+        r"^\(\d+\) Generate\b.*?^Arguments: (.*)$", plan, re.M | re.S
+    )
+
+
+# the serving-instant explode: one row per grid instant in [_k0, _k1]
+_SERVE_EXPLODE = re.compile(r"explode\(.*\bsequence\(_k0#")
+
+
 @pytest.mark.parametrize("name", HEADLINE)
 def test_no_sort_aggregate_and_narrow_exchanges(spark, name):
     df = QUERIES[name](spark, SF_DIR)
@@ -97,17 +110,23 @@ def test_single_metric_scan_prunes_branches(spark):
     vf = PqEngine(spark, strict=False).evaluate("value", samples, interval_ms=60_000)
     plan = _formatted_plan(spark, vf.cells)
     assert "Union" not in plan
-    assert not re.search(r"^\(\d+\) Generate Explode\(stack", plan, re.M)
+    assert not [g for g in _generators(plan) if g.startswith("stack(")], plan
+    # the guard can fire: a stack() unpivot is found by the same search
+    stacked = _formatted_plan(
+        spark, src.selectExpr("stack(2, 'value', value, 'value2', value2)")
+    )
+    assert [g for g in _generators(stacked) if g.startswith("stack(")], stacked
     for m in re.finditer(r"ReadSchema: (\S+)", plan):
         assert "value2" not in m.group(1), m.group(1)
 
 
-def test_high_fanout_plans_avoid_explode(spark):
+def test_high_fanout_plans_avoid_explode(spark, monkeypatch):
     """Above the fan-out switch, instant and over-time plans must contain
     no serving-instant Generate over a k0..k1 sequence (the row
     multiplication the adaptive strategies exist to avoid) — they run as
     per-series window plans instead."""
     from pq_spark.driver_queries import event_samples
+    from pq_spark.engine.planner import Planner
     from pq_spark.engine.runner import PqEngine
 
     samples = event_samples(spark, SF_DIR)
@@ -115,10 +134,19 @@ def test_high_fanout_plans_avoid_explode(spark):
     # ratio 60 > 16 for both: lookback 1h @ 1m grid / range 1h @ 1m grid
     for q, kw in [("value", dict(interval_ms=60_000, lookback_ms=3_600_000)),
                   ("sum_over_time(value[1h])", dict(interval_ms=60_000))]:
-        vf = eng.evaluate(q, samples, since_ms=1_704_067_200_000, **kw)
-        plan = _formatted_plan(spark, vf.cells)
-        assert not re.search(r"^\(\d+\) Generate explode\(sequence\(_k0", plan, re.M), (q, plan)
+        def serve_explodes():
+            vf = eng.evaluate(q, samples, since_ms=1_704_067_200_000, **kw)
+            plan = _formatted_plan(spark, vf.cells)
+            return [g for g in _generators(plan) if _SERVE_EXPLODE.match(g)], plan
+
+        found, plan = serve_explodes()
+        assert not found, (q, plan)
         assert "Window" in plan, q
+        # the guard can fire: the forced explode path is found
+        with monkeypatch.context() as m:
+            m.setattr(Planner, "FANOUT_SWITCH", 10**9)
+            found, plan = serve_explodes()
+        assert found, (q, plan)
 
 
 TIER_FAMILY = [

@@ -398,14 +398,14 @@ def test_bucketed_tier_skips_reshuffle(spark, tmp_path, samples):
     pre-shuffled the table once at write time."""
     import re
 
-    from pq_spark.rollup.tiers import (
-        read_bucketed_tier, tier_partials, write_bucketed_tier,
-    )
+    from pq_spark.rollup.tiers import tier_partials, write_bucketed_tier
 
     p1m = tier_partials(samples, "1m")
     name = "t1m_bucketed_test"
     write_bucketed_tier(p1m, name, str(tmp_path / "t1m"), buckets=8)
-    t = read_bucketed_tier(spark, name)
+    # through the catalog: spark.read.parquet(path) would lose the bucket
+    # spec and re-shuffle
+    t = spark.table(name)
 
     hourly = tier_from_tier(t, "1h")
     plan = hourly._jdf.queryExecution().explainString(
@@ -417,7 +417,7 @@ def test_bucketed_tier_skips_reshuffle(spark, tmp_path, samples):
     assert n_exchange == 0, plan
     assert hourly.count() > 0
 
-    j = t.alias("a").join(read_bucketed_tier(spark, name).alias("b"), "skey")
+    j = t.alias("a").join(spark.table(name).alias("b"), "skey")
     planj = j._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
@@ -657,11 +657,17 @@ def test_warc_recrawl_duplicates(spark, tmp_path, pages):
 
 
 def test_page_series_dim_fast_path_equals_generic(spark, pages):
-    """The label-space dim (one narrow aggregate over page rows) must equal
-    series_dim over the full sample union — including the value-null rule:
-    a metric's series exists iff >=1 row has a non-null value for it."""
-    from pq_spark.rollup.pages import page_samples, page_series_dim
+    """The label-space dim (one narrow aggregate over page rows, as the
+    pipeline builds it) must equal series_dim over the full sample union —
+    including the value-null rule: a metric's series exists iff >=1 row
+    has a non-null value for it."""
+    from pq_spark.rollup.pages import (
+        _page_enriched, page_samples, page_series_dim_from_enriched,
+    )
     from pq_spark.rollup.tiers import series_dim
+
+    def page_series_dim(pages):
+        return page_series_dim_from_enriched(_page_enriched(pages))
 
     def key(rows):
         return sorted(
@@ -824,6 +830,29 @@ def test_compact_rewrites_fragmented_partitions(spark, tmp_path, samples):
     store.vacuum("tier_1m", retain_snapshots=1)
     with pytest.raises(FileNotFoundError):
         store.read(spark, "tier_1m", snapshot_id=pre_sid)
+
+
+def test_compact_keeps_commit_layout(spark, tmp_path):
+    """commit() and compact() share one writer-width rule: a partition
+    that commit spread over balance-derived writers (2 × MIN_ROWS_PER_FILE
+    rows, below target_rows_per_file) is already at compact's width, so
+    compact rewrites nothing."""
+    import glob
+
+    rows = 2 * TierStore.MIN_ROWS_PER_FILE
+    df = spark.range(rows).select(
+        F.col("id").alias("skey"),
+        F.col("id").cast("double").alias("value"),
+        F.lit("2024-01-01").alias("date"),
+    )
+    store = TierStore(str(tmp_path / "store"))
+    assert rows < store.target_rows_per_file
+    store.commit(df, "t")
+    files = glob.glob(
+        str(tmp_path / "store" / "t" / "data" / "*" / "date=*" / "*.parquet")
+    )
+    assert len(files) == 2, files
+    assert store.compact(spark, "t", slack_files=0)["rewritten"] == []
 
 
 def test_route_tier_selection():
