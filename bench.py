@@ -70,18 +70,23 @@ def _mk_spark(cpus: int, shuffle_partitions: int | None = None,
             .config("spark.pyspark.python", sys.executable)
         )
     else:
+        from perfbench.run import box_facts, driver_heap_gb
+
         master = f"local[{cpus}]"
         parallelism = cpus
+        # the benchmark of record's heap rule (a fifth of RAM, 1-4 GB);
+        # $SPARK_GRAFT_MEM overrides it
+        heap = f"{driver_heap_gb(box_facts()['mem_total_bytes'])}g"
         builder = SparkSession.builder.master(master).config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "24g")
+            "spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", heap)
         )
 
-    if os.path.isdir("/dev/shm"):
-        # shuffle/spill scratch on tmpfs: the shared host's disk contention
-        # was the round-2 noise source; shuffle files are ephemeral
-        shm = "/dev/shm/pq_spark_local"
-        os.makedirs(shm, exist_ok=True)
-        builder = builder.config("spark.local.dir", shm)
+    # shuffle/spill scratch on disk, not tmpfs: on a small box tmpfs pages
+    # compete with the driver heap and the Python workers for RAM
+    local_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             ".bench_work", "spark-local")
+    os.makedirs(local_dir, exist_ok=True)
+    builder = builder.config("spark.local.dir", local_dir)
 
     return (
         builder.appName("pq_spark-bench")

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from . import textops
+from . import held, textops
 from .engine.ingest import samples_from_table
 from .engine.runner import PqEngine
 from .rollup.tiers import gapfill, rollup_tier, tier_from_tier
@@ -178,7 +178,8 @@ ORACLES: dict[str, str] = {}
 
 
 def register(name: str, fn, sql: str | None):
-    QUERIES[name] = fn
+    # what a query materializes lives as long as the frame it returns
+    QUERIES[name] = held.owned(fn)
     if sql is not None:
         ORACLES[name] = sql
 
@@ -427,7 +428,7 @@ def _gapfill_query(spark, sf):
     # gapfill consumes its input three times (bounds, serve, identity) —
     # the wide form re-ran the whole tier pipeline per consumer
     dim = series_dim(day1)
-    p = tier_partials(day1, "1m", dim=dim).persist()
+    p = held.persist(tier_partials(day1, "1m", dim=dim))
     out = gapfill(p, 60_000, lookback_buckets=5, dim=dim)
     return out.select(
         "bucket_ts",

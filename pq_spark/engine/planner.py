@@ -44,11 +44,12 @@ string and the formatter sorts on it at output time.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .. import held
 from ..errors import MatchingError, PqError
 from ..query.ast import (
     AGG_OVER_TIME_FUNCS,
@@ -312,15 +313,6 @@ class PlanContext:
     start_at_ms: int | None = None
     strict: bool = True
     extensions: bool = False
-    # per-selector dims are persisted (they are read by SEVERAL broadcasts:
-    # the group/match maps and the output label join — without caching each
-    # broadcast would recompute the fact-scale dim discovery); the runner
-    # unpersists them after the result is consumed
-    persisted: list = None
-
-    def __post_init__(self):
-        if self.persisted is None:
-            self.persisted = []
 
 
 class Planner:
@@ -454,16 +446,15 @@ class Planner:
         # each would otherwise re-ANALYZE the whole fact lineage under the
         # cached plan — the truncated LogicalRDD leaf makes every
         # downstream plan small (measured: −0.1 s build and −0.05 s exec
-        # per grid query at sf0.1). Content is identical; the blocks are
-        # freed by the ContextCleaner once the query's frames are
-        # released (same lifecycle textops.dedup_components relies on).
-        per_series = (
+        # per grid query at sf0.1). Content is identical; the evaluation's
+        # scope holds it, and the ContextCleaner frees the blocks once no
+        # frame of the query refers to them.
+        per_series = held.checkpoint(
             matched.select(_sig2_expr(F.col("labels")).alias("_sig2"), "ts")
             .groupBy("_sig2")
-            .agg(F.min("ts").alias("_tsmin"), F.max("ts").alias("_tsmax"))
-            .localCheckpoint(eager=False)
+            .agg(F.min("ts").alias("_tsmin"), F.max("ts").alias("_tsmax")),
+            eager=False,
         )
-        self.ctx.persisted.append(per_series)
         bounds = per_series.agg(
             F.min("_tsmin").alias("_tsmin"), F.max("_tsmax").alias("_tsmax")
         )
@@ -669,15 +660,7 @@ class Planner:
         if not self.ctx.extensions:
             raise PqError("subquery is not implemented")
         step = node.step_ms if node.step_ms is not None else self.ctx.interval_ms
-        sub_ctx = PlanContext(
-            samples=self.ctx.samples,
-            interval_ms=step,
-            lookback_ms=self.ctx.lookback_ms,
-            start_at_ms=self.ctx.start_at_ms,
-            strict=self.ctx.strict,
-            extensions=self.ctx.extensions,
-            persisted=self.ctx.persisted,  # shared: runner unpersists all
-        )
+        sub_ctx = replace(self.ctx, interval_ms=step)
         inner = Planner(sub_ctx).plan(node.inner)
         if not isinstance(inner, VectorFrame):
             raise PqError("subquery expects an instant vector expression")
@@ -1249,14 +1232,9 @@ class Planner:
         division, bit-reproducible in any engine)."""
         if not isinstance(argnode, VectorSelector) or argnode.duration_ms:
             raise PqError("timestamp expects an instant vector selector")
-        from dataclasses import replace
-
         swapped = replace(
             self.ctx,
-            samples=self.ctx.samples.withColumn(
-                "value", F.col("ts") / F.lit(1000.0)
-            ),
-            persisted=self.ctx.persisted,
+            samples=self.ctx.samples.withColumn("value", F.col("ts") / F.lit(1000.0)),
         )
         saved, self.ctx = self.ctx, swapped
         try:

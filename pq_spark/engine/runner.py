@@ -13,13 +13,14 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import held
 from ..errors import PqError
 from ..program import Mapper, ProgramAST, parse_program
 from ..query.ast import Expr, VectorSelector
 from ..timeparse import parse_duration, try_parse_time
 from . import formatter as fmt
 from . import ingest
-from .frames import RangeFrame, ScalarResult, ScalarSeries, VectorFrame
+from .frames import ScalarResult, ScalarSeries, VectorFrame
 from .planner import PlanContext, Planner
 
 ENGINE_CONFS = {
@@ -90,24 +91,11 @@ def _disable_dataframe_debugging(spark: SparkSession) -> None:
         pass
 
 
-def _count_selectors(node) -> int:
-    from ..query import ast as A
-
-    if isinstance(node, A.VectorSelector):
+def _count_selectors(node: Expr) -> int:
+    if isinstance(node, VectorSelector):
         return 1
-    if isinstance(node, A.Parentheses):
-        return _count_selectors(node.inner)
-    if isinstance(node, A.UnaryOperation):
-        return _count_selectors(node.inner)
-    if isinstance(node, A.AggregateOperation):
-        return _count_selectors(node.inner)
-    if isinstance(node, A.BinaryOperation):
-        return _count_selectors(node.lhs) + _count_selectors(node.rhs)
-    if isinstance(node, A.FunctionCall):
-        return sum(_count_selectors(a) for a in node.args if isinstance(a, A.Expr))
-    if isinstance(node, A.Subquery):
-        return _count_selectors(node.inner)
-    return 0
+    kids = [k for v in vars(node).values() for k in (v if isinstance(v, list) else [v])]
+    return sum(_count_selectors(k) for k in kids if isinstance(k, Expr))
 
 
 @dataclass
@@ -118,7 +106,6 @@ class ProgramResult:
     records: DataFrame | None = None
     query_result: object | None = None  # ScalarResult | VectorFrame | RangeFrame
     errors: DataFrame | None = None  # DF[line_no, error] — the -v channel
-    _cached: list | None = None  # DataFrames to unpersist after output
 
     def error_lines(self) -> list[str]:
         """Per-record decode/map errors in input order (printed to stderr
@@ -133,53 +120,32 @@ class ProgramResult:
         verbose: bool = False,
         interactive: bool = False,
     ) -> list[str]:
-        try:
-            if self.kind == "query":
-                if interactive and self.formatter is None:
-                    return fmt.prominteractive_lines(self.query_result, strict_checks)
-                if self.formatter == "promapi":
-                    return fmt.promapi_lines(self.query_result, strict_checks)
-                if self.formatter == "json":
-                    # to_json delegates vectors to promapi; scalars render
-                    # as a bare number (reference: src/format/json.rs:88-95)
-                    from .frames import ScalarResult
-                    from ..floatfmt import rust_f64_str
+        if self.kind == "query":
+            if interactive and self.formatter is None:
+                return fmt.prominteractive_lines(self.query_result, strict_checks)
+            if self.formatter == "promapi":
+                return fmt.promapi_lines(self.query_result, strict_checks)
+            if self.formatter == "json":
+                # to_json delegates vectors to promapi; scalars render
+                # as a bare number (reference: src/format/json.rs:88-95)
+                from ..floatfmt import rust_f64_str
 
-                    if isinstance(self.query_result, ScalarResult):
-                        return [rust_f64_str(self.query_result.value)]
-                    return fmt.promapi_lines(self.query_result, strict_checks)
-                # default: human-readable
-                return fmt.promhuman_lines(self.query_result, strict_checks, verbose)
-            if self.kind == "entries":
-                if self.formatter == "json":
-                    return fmt.entries_json_lines(self.entries, verbose)
-                if self.formatter is None:
-                    return fmt.entries_human_lines(self.entries, verbose)
-            if self.kind == "records":
-                if self.formatter == "json":
-                    return fmt.records_json_lines(self.records, verbose)
-                if self.formatter is None:
-                    return fmt.records_human_lines(self.records, verbose)
-            raise PqError(f"unsupported formatter for {self.kind} output")
-        finally:
-            # unpersist once, then forget — a second output_lines() (or an
-            # error_lines() after) recomputes but must not double-unpersist
-            for df in self._cached or []:
-                df.unpersist()
-            self._cached = []
-
-    def dataframe(self) -> DataFrame:
-        """Relational access to the result (engine-level API)."""
+                if isinstance(self.query_result, ScalarResult):
+                    return [rust_f64_str(self.query_result.value)]
+                return fmt.promapi_lines(self.query_result, strict_checks)
+            # default: human-readable
+            return fmt.promhuman_lines(self.query_result, strict_checks, verbose)
         if self.kind == "entries":
-            return self.entries
+            if self.formatter == "json":
+                return fmt.entries_json_lines(self.entries, verbose)
+            if self.formatter is None:
+                return fmt.entries_human_lines(self.entries, verbose)
         if self.kind == "records":
-            return self.records
-        qr = self.query_result
-        if isinstance(qr, VectorFrame):
-            return qr.cells
-        if isinstance(qr, RangeFrame):
-            return qr.points
-        raise PqError("scalar result has no DataFrame form")
+            if self.formatter == "json":
+                return fmt.records_json_lines(self.records, verbose)
+            if self.formatter is None:
+                return fmt.records_human_lines(self.records, verbose)
+        raise PqError(f"unsupported formatter for {self.kind} output")
 
 
 class PqEngine:
@@ -202,6 +168,7 @@ class PqEngine:
 
     # -- program entry point ------------------------------------------------
 
+    @held.owned
     def run_program(
         self,
         program: str,
@@ -231,21 +198,17 @@ class PqEngine:
             return ProgramResult("records", ast.formatter, records=records, errors=errors)
 
         samples = ingest.samples_from_records(records)
-        cached = []
         if _count_selectors(ast.query) > 1:
-            samples = samples.cache()
-            cached.append(samples)
+            samples = held.persist(samples)
 
         result = self.evaluate(
             ast.query, samples, since_ms, interval_ms, lookback_ms
         )
-        cached.extend(self.last_persisted)
-        return ProgramResult(
-            "query", ast.formatter, query_result=result, errors=errors, _cached=cached
-        )
+        return ProgramResult("query", ast.formatter, query_result=result, errors=errors)
 
     # -- query over an arbitrary samples fact table ---------------------------
 
+    @held.owned
     def evaluate(
         self,
         query: Expr | str,
@@ -287,10 +250,9 @@ class PqEngine:
             )
             facts = result.facts.select("instant", skey.alias("skey"), "value")
             result = VectorFrame(result.grid, facts, dim, result.checks)
-        # per-selector dims persisted during planning; callers that bypass
-        # run_program may unpersist via this list (they are dim-sized and
-        # LRU-evictable, so leaving them cached is also fine)
-        self.last_persisted = list(ctx.persisted)
+        # kept for callers that release the planning frames themselves
+        # (perfbench/serve.py); the scope releases them in any case
+        self.last_persisted = held.frames()
         return result
 
 

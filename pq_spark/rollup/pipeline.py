@@ -17,16 +17,16 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import held
 from . import gorilla
 from .lineage import TierStore, with_date
 from .pages import (
     _PAGE_TABLE_ARGS,
     _page_enriched,
     extract_text_udf,
-    page_samples,  # noqa: F401 — public seam, used by tests/benchmarks
     page_series_dim_from_enriched,
 )
-from .tiers import TIER_MS, attach_series, tier_from_tier, tier_partials
+from .tiers import attach_series, tier_from_tier, tier_partials
 
 
 def verify_extraction(pages: DataFrame) -> int:
@@ -62,95 +62,89 @@ def run_pipeline(
     store = TierStore(out_path)
     metrics: dict = {"stages": {}}
     t_start = time.time()
-    if cache_pages:
-        pages = pages.persist()
-
     # star schema: the NARROW fact (sig, ts, seq, value) feeds both the tier
     # cascade and the Gorilla packer — label maps live in the tiny series
-    # dim. Only the fact is cached; at cluster scale it'd be a checkpointed
-    # table.
-    from pyspark.sql import functions as _F
-
+    # dim. The scopes below own every cached frame: the narrow partials
+    # are released after the last tier commit, the fact, dim and enriched
+    # projection after the Gorilla commit, and all of them when a stage
+    # raises (an extraction-invariant violation included).
     from ..engine.ingest import samples_from_table
-    from ..engine.planner import sig_expr
-    from .tiers import series_dim, series_key  # noqa: F401
+    from .tiers import series_key
 
-    # FUSED extraction check: the enriched projection already decodes the
-    # heavy `html` column (content_len), so the byte-identity invariant
-    # (`_bad`) rides the SAME scan instead of a second full read of the
-    # page table. The narrow projection is persisted, the Arrow UDF is paid
-    # exactly once, and the post-write `sum(_bad)` below is a cache hit.
-    enriched = _page_enriched(pages, verify=check_extraction).persist()
-    samples_wide = samples_from_table(enriched, **_PAGE_TABLE_ARGS)
-    # `_sig` is the statically-concatenated signature samples_from_table
-    # precomputes (same string sig_expr derives from the map, minus the
-    # per-row map build/sort) — fall back for sample sources without it
-    skey_col = (
-        series_key(_F.col("_sig"))
-        if "_sig" in samples_wide.columns
-        else series_key(sig_expr(_F.col("labels")))
-    )
-    samples = samples_wide.select(
-        skey_col.alias("skey"), "ts", "seq", "value"
-    ).persist()
-    # label-space fast path: one narrow aggregate over page rows instead of
-    # a signature-distinct over the 3x-wider sample union (round-5 verdict
-    # item 5 — the dim build was ~23% of the tier_1m stage); built from the
-    # persisted enriched projection so it reuses the fused-verify cache.
-    dim = page_series_dim_from_enriched(enriched).persist()
-
-    # tier cascade with resume: the cascade itself stays NARROW (skey-keyed
-    # partials, persisted); labels attach only at each commit edge. Each
-    # tier commits date-partitioned with manifests; unchanged partitions are
-    # skipped on re-runs.
-    t0 = time.time()
-    p1m = tier_partials(samples, "1m", salt_buckets=salt_buckets, dim=dim).persist()
-    # tier_1m's heavy data write runs BEFORE the invariant check joins, but
-    # with publish=False nothing it wrote is visible (manifests + CURRENT
-    # swap are staged) — a violation aborts with zero published state, so
-    # readers can never serve tiers derived from bad extractions.
-    r1 = store.commit(
-        with_date(attach_series(p1m, dim)), "tier_1m",
-        publish=not check_extraction,
-    )
-
-    if check_extraction:
-        t0v = time.time()
-        mismatches = enriched.agg(_F.sum("_bad")).first()[0] or 0
-        if mismatches:
-            raise RuntimeError(
-                f"extraction invariant violated for {mismatches} pages"
+    with held.scope():
+        if cache_pages:
+            pages = held.persist(pages)
+        # FUSED extraction check: the enriched projection already decodes
+        # the heavy `html` column (content_len), so the byte-identity
+        # invariant (`_bad`) rides the SAME scan instead of a second full
+        # read of the page table. The narrow projection is persisted, the
+        # Arrow UDF is paid exactly once, and the post-write `sum(_bad)`
+        # below is a cache hit.
+        enriched = held.persist(_page_enriched(pages, verify=check_extraction))
+        # keyed by the statically-concatenated `_sig` samples_from_table
+        # precomputes (same string sig_expr derives from the map, minus the
+        # per-row map build/sort)
+        samples = held.persist(
+            samples_from_table(enriched, **_PAGE_TABLE_ARGS).select(
+                series_key(F.col("_sig")).alias("skey"), "ts", "seq", "value"
             )
-        store.finalize_commit(r1)
-        metrics["stages"]["verify_extraction"] = {
-            "elapsed_s": round(time.time() - t0v, 3), "fused": True
-        }
-    metrics["stages"]["tier_1m"] = r1.metrics
-
-    p1h = tier_from_tier(p1m, "1h").persist()
-    r2 = store.commit(with_date(attach_series(p1h, dim)), "tier_1h")
-    metrics["stages"]["tier_1h"] = r2.metrics
-
-    p1d = tier_from_tier(p1h, "1d")
-    r3 = store.commit(with_date(attach_series(p1d, dim)), "tier_1d")
-    metrics["stages"]["tier_1d"] = r3.metrics
-    metrics["stages"]["cascade_elapsed_s"] = time.time() - t0
-    p1m.unpersist()
-    p1h.unpersist()
-
-    if pack:
-        t0 = time.time()
-        packed = gorilla.pack_blocks(samples, block_ms=gorilla_block_ms, dim=dim)
-        rp = store.commit(
-            with_date(packed, ts_col="block_ts"), "gorilla_blocks"
         )
-        metrics["stages"]["gorilla"] = rp.metrics
+        # label-space fast path: one narrow aggregate over page rows instead
+        # of a signature-distinct over the 3x-wider sample union (round-5
+        # verdict item 5 — the dim build was ~23% of the tier_1m stage);
+        # built from the persisted enriched projection so it reuses the
+        # fused-verify cache.
+        dim = held.persist(page_series_dim_from_enriched(enriched))
 
-    samples.unpersist()
-    dim.unpersist()
-    enriched.unpersist()
-    if cache_pages:
-        pages.unpersist()
+        # tier cascade with resume: the cascade itself stays NARROW
+        # (skey-keyed partials, persisted); labels attach only at each
+        # commit edge. Each tier commits date-partitioned with manifests;
+        # unchanged partitions are skipped on re-runs.
+        t0 = time.time()
+        with held.scope():
+            p1m = held.persist(
+                tier_partials(samples, "1m", salt_buckets=salt_buckets, dim=dim)
+            )
+            # tier_1m's heavy data write runs BEFORE the invariant check
+            # joins, but with publish=False nothing it wrote is visible
+            # (manifests + CURRENT swap are staged) — a violation aborts
+            # with zero published state, so readers can never serve tiers
+            # derived from bad extractions.
+            r1 = store.commit(
+                with_date(attach_series(p1m, dim)), "tier_1m",
+                publish=not check_extraction,
+            )
+
+            if check_extraction:
+                t0v = time.time()
+                mismatches = enriched.agg(F.sum("_bad")).first()[0] or 0
+                if mismatches:
+                    raise RuntimeError(
+                        f"extraction invariant violated for {mismatches} pages"
+                    )
+                store.finalize_commit(r1)
+                metrics["stages"]["verify_extraction"] = {
+                    "elapsed_s": round(time.time() - t0v, 3), "fused": True
+                }
+            metrics["stages"]["tier_1m"] = r1.metrics
+
+            p1h = held.persist(tier_from_tier(p1m, "1h"))
+            r2 = store.commit(with_date(attach_series(p1h, dim)), "tier_1h")
+            metrics["stages"]["tier_1h"] = r2.metrics
+
+            p1d = tier_from_tier(p1h, "1d")
+            r3 = store.commit(with_date(attach_series(p1d, dim)), "tier_1d")
+            metrics["stages"]["tier_1d"] = r3.metrics
+            metrics["stages"]["cascade_elapsed_s"] = time.time() - t0
+
+        if pack:
+            t0 = time.time()
+            packed = gorilla.pack_blocks(samples, block_ms=gorilla_block_ms, dim=dim)
+            rp = store.commit(
+                with_date(packed, ts_col="block_ts"), "gorilla_blocks"
+            )
+            metrics["stages"]["gorilla"] = rp.metrics
+
     total_points = (
         metrics["stages"]["tier_1m"]["rows_total"]
         + metrics["stages"]["tier_1h"]["rows_total"]
@@ -200,13 +194,10 @@ def main() -> None:
     ap.add_argument("--no-pack", action="store_true")
     args = ap.parse_args()
 
+    from ..engine.runner import configure_session
+
     spark = SparkSession.builder.appName("pq_spark-rollup").getOrCreate()
-    for k, v in {
-        "spark.sql.ansi.enabled": "false",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-    }.items():
-        spark.conf.set(k, v)
+    configure_session(spark)  # before the page plan is analyzed
 
     if args.synth_pages:
         from .pages import synth_pages

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from . import held
+
 # ---------------------------------------------------------------------------
 # shared primitives
 # ---------------------------------------------------------------------------
@@ -172,6 +174,7 @@ def _cap_buckets(banded: DataFrame, key: str, max_bucket: int | None) -> DataFra
     return banded.join(keep, key, "left_semi")
 
 
+@held.owned
 def minhash_lsh_pairs(
     docs: DataFrame, num_hashes: int = 16, bands: int = 4, shingle_n: int = 3,
     text_col: str = "text", id_col: str = "doc_id", max_bucket: int | None = None,
@@ -196,7 +199,7 @@ def minhash_lsh_pairs(
     banded = sig.select(F.col(id_col), F.explode(band_keys).alias("band_key"))
     # three consumers (cap count, join a, join b) of the shingle+minhash
     # subtree — materialize the banded keys once (bands × docs rows)
-    banded = banded.persist()
+    banded = held.persist(banded)
     banded = _cap_buckets(banded, "band_key", max_bucket)
     a = banded.alias("a")
     b = banded.alias("b")
@@ -210,6 +213,7 @@ def minhash_lsh_pairs(
     )
 
 
+@held.owned
 def near_dup_pairs(
     docs: DataFrame, threshold: float = 0.5, num_hashes: int = 16, bands: int = 4,
     shingle_n: int = 3, text_col: str = "text", id_col: str = "doc_id",
@@ -222,10 +226,10 @@ def near_dup_pairs(
     cand = minhash_lsh_pairs(
         docs, num_hashes, bands, shingle_n, text_col, id_col, max_bucket
     )
-    sh = docs.select(
+    sh = held.persist(docs.select(
         F.col(id_col).alias("doc"),
         F.explode(shingles_col(F.col(text_col), shingle_n)).alias("sh"),
-    ).persist()  # three consumers: sizes + both sides of the verify join
+    ))  # three consumers: sizes + both sides of the verify join
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
     sha = sh.select(F.col("doc").alias("doc_a"), "sh")
     shb = sh.select(F.col("doc").alias("doc_b"), "sh")
@@ -260,14 +264,15 @@ def dedup_components(
     aggregation + a convergence count — all shuffles keyed by doc id,
     never quadratic. Rounds needed = component diameter (near-dup clusters
     are shallow; the loop stops at the first unchanged round). Each
-    round's labels are persisted and the previous round unpersisted so
+    round's labels are persisted and the previous round released so
     lineage stays one round deep; the RESULT is materialized into an eager
-    ``localCheckpoint`` so the final round's cache is released before
-    returning — repeated calls in one session leave nothing pinned in
-    storage (the checkpoint blocks are freed when the returned DataFrame
-    is garbage-collected). Callers that must survive executor loss should
-    write the result to a sink promptly (localCheckpoint stores on
-    executors, the standard trade-off for truncating iterative lineage).
+    ``localCheckpoint`` and the loop's ``held.scope`` releases everything
+    else before returning, or on a raise — repeated calls in one session
+    leave nothing pinned in storage (the checkpoint blocks are freed when
+    the returned DataFrame is garbage-collected). Callers that must
+    survive executor loss should write the result to a sink promptly
+    (localCheckpoint stores on executors, the standard trade-off for
+    truncating iterative lineage).
 
     LOGICAL-PLAN growth is handled separately from data caching: persist
     caches rows but leaves the plan intact, and each round's plan
@@ -292,81 +297,70 @@ def dedup_components(
 
     Output: (doc_id, component_id, is_keeper) for EVERY doc — singletons
     are their own keeper."""
-    edges = (
-        pairs.select(F.col("doc_a").alias("_src"), F.col("doc_b").alias("_dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("_src"), F.col("doc_a").alias("_dst"))
+    with held.scope():
+        # a checkpoint, not a persist: it truncates the plan (see above)
+        edges = held.checkpoint(
+            pairs.select(F.col("doc_a").alias("_src"), F.col("doc_b").alias("_dst"))
+            .unionByName(
+                pairs.select(F.col("doc_b").alias("_src"), F.col("doc_a").alias("_dst"))
+            ),
+            eager=True,
         )
-        # eager localCheckpoint, NOT persist: persist caches rows but does
-        # not truncate the plan, and every loop round embeds a fresh copy
-        # of this subtree — for LSH-derived pair graphs the untruncated
-        # plan string alone OOMed the driver at sf1. The checkpoint makes
-        # each round see a leaf LogicalRDD instead.
-        .localCheckpoint(eager=True)
-    )
-    labels = docs.select(F.col(id_col), F.col(id_col).alias("_comp")).persist()
-    cached = labels  # the persisted relation backing `labels`
-    converged = False
-    for _round in range(max_iters):
-        neigh = (
-            edges.join(
-                labels.select(F.col(id_col).alias("_src"), "_comp"), "_src"
+        labels = held.persist(
+            docs.select(F.col(id_col), F.col(id_col).alias("_comp"))
+        )
+        cached = labels  # the materialized relation backing `labels`
+        for _round in range(max_iters):
+            neigh = (
+                edges.join(
+                    labels.select(F.col(id_col).alias("_src"), "_comp"), "_src"
+                )
+                .groupBy(F.col("_dst").alias(id_col))
+                .agg(F.min("_comp").alias("_ncomp"))
             )
-            .groupBy(F.col("_dst").alias(id_col))
-            .agg(F.min("_comp").alias("_ncomp"))
-        )
-        new = (
-            labels.withColumnRenamed("_comp", "_old")
-            .join(neigh, id_col, "left")
-            .select(
-                id_col,
-                F.least(
-                    F.col("_old"), F.coalesce(F.col("_ncomp"), F.col("_old"))
-                ).alias("_comp"),
-                "_old",
+            new = held.persist(
+                labels.withColumnRenamed("_comp", "_old")
+                .join(neigh, id_col, "left")
+                .select(
+                    id_col,
+                    F.least(
+                        F.col("_old"), F.coalesce(F.col("_ncomp"), F.col("_old"))
+                    ).alias("_comp"),
+                    "_old",
+                )
             )
-            .persist()
+            if plan_probe is not None:
+                plan_probe(new)
+            # the convergence count MATERIALIZES new's cache; `labels` stays
+            # a projection over that live cache (releasing it here would
+            # force every later round to replay the join chain from round 0)
+            changed = new.filter(F.col("_comp") != F.col("_old")).count()
+            held.release(cached)
+            cached = new
+            labels = new.select(id_col, "_comp")
+            if changed == 0:
+                break
+            if (_round + 1) % checkpoint_every == 0:
+                # re-anchor on a leaf LogicalRDD (plan bound, see above); the
+                # count materialized the rows, so this copies from the cache
+                anchored = held.checkpoint(labels, eager=True)
+                held.release(cached)
+                cached = labels = anchored
+        else:
+            # a wrong answer would silently violate the oracle contract; a
+            # component's diameter exceeding max_iters must fail loudly
+            raise RuntimeError(
+                f"dedup_components did not converge within {max_iters} rounds "
+                "(a duplicate cluster's diameter exceeds max_iters — raise it)"
+            )
+        return held.checkpoint(
+            labels.select(
+                F.col(id_col),
+                F.col("_comp").alias("component_id"),
+                (F.col(id_col) == F.col("_comp")).alias("is_keeper"),
+            ),
+            eager=True,
         )
-        if plan_probe is not None:
-            plan_probe(new)
-        # the convergence count MATERIALIZES new's cache; `labels` stays a
-        # projection over that live cache (unpersisting it here would force
-        # every later round to replay the whole join chain from round 0)
-        changed = new.filter(F.col("_comp") != F.col("_old")).count()
-        cached.unpersist()
-        cached = new
-        labels = new.select(id_col, "_comp")
-        if changed == 0:
-            converged = True
-            break
-        if (_round + 1) % checkpoint_every == 0:
-            # plan truncation: each round's plan references the previous
-            # round TWICE (join left side + neighbor agg) and persisted
-            # rounds print with their full cached subtree — ~4x growth per
-            # round; re-anchoring the labels on a leaf LogicalRDD every
-            # few rounds bounds the plan at ~4**checkpoint_every small
-            # subtrees regardless of graph diameter. The rows are already
-            # materialized (the count above), so this is a cache-to-cache
-            # copy, not a recompute.
-            anchored = labels.localCheckpoint(eager=True)
-            cached.unpersist()
-            cached = anchored
-            labels = anchored
-    if not converged:
-        # a wrong answer would silently violate the oracle contract; a
-        # component's diameter exceeding max_iters must fail loudly
-        cached.unpersist()
-        raise RuntimeError(
-            f"dedup_components did not converge within {max_iters} rounds "
-            "(a duplicate cluster's diameter exceeds max_iters — raise it)"
-        )
-    out = labels.select(
-        F.col(id_col),
-        F.col("_comp").alias("component_id"),
-        (F.col(id_col) == F.col("_comp")).alias("is_keeper"),
-    ).localCheckpoint(eager=True)
-    cached.unpersist()
-    return out
 
 
 def dedup_survivors(
@@ -415,6 +409,7 @@ def dedup_survivors(
     )
 
 
+@held.owned
 def ngram_jaccard_pairs(
     docs: DataFrame, threshold: float = 0.5, shingle_n: int = 3,
     text_col: str = "text", id_col: str = "doc_id",
@@ -436,7 +431,7 @@ def ngram_jaccard_pairs(
     )
     # four consumers of the shingle fold (sizes, cap count, join a/b):
     # materialize once instead of re-shingling the corpus per branch
-    sh = sh.persist()
+    sh = held.persist(sh)
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
     if max_doc_freq is not None:
         sh = _cap_buckets(sh, "sh", max_doc_freq)
@@ -498,6 +493,7 @@ def simhash_chunk_bounds(max_hamming: int) -> list[tuple[int, int]]:
     return bounds
 
 
+@held.owned
 def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
                   text_col: str = "text", id_col: str = "doc_id",
                   max_bucket: int | None = None) -> DataFrame:
@@ -520,7 +516,7 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     )
     banded = sh.select(F.col(id_col), F.col("simhash"), F.explode(chunks).alias("chunk"))
     # same three-consumer shape as minhash_lsh_pairs: materialize once
-    banded = banded.persist()
+    banded = held.persist(banded)
     banded = _cap_buckets(banded, "chunk", max_bucket)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -704,10 +700,10 @@ def kmeans_centroids(
     their previous centroid. The (id, vector) projection is persisted for
     the duration of training so the ``iters`` scans hit cache, not the
     source (round-3 verdict item 5) — at 100 TB the narrow projection is
-    what you want resident, not the full table; it is unpersisted before
+    what you want resident, not the full table; it is released before
     returning. Train once and reuse (the centroids ARE the model)."""
-    narrow = embeddings.select(id_col, vec_col).persist()
-    try:
+    with held.scope():
+        narrow = held.persist(embeddings.select(id_col, vec_col))
         first = narrow.orderBy(id_col).limit(k).collect()
         centroids = [
             (i, [float(x) for x in r[vec_col]]) for i, r in enumerate(first)
@@ -738,8 +734,6 @@ def kmeans_centroids(
                 for cid, vec in centroids
             ]
         return centroids
-    finally:
-        narrow.unpersist()
 
 
 def ann_topk_ivf(
@@ -1259,6 +1253,7 @@ def ngrams_col(col: Column, n: int) -> Column:
     return _bind(words_col(col), lambda w: _ngrams(w, n))
 
 
+@held.owned
 def doc_repetition(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 ) -> DataFrame:
@@ -1307,7 +1302,7 @@ def doc_repetition(
             ),
         )
     ).alias("t")
-    counts = (
+    counts = held.persist(
         base.select(id_col, "_nc", tagged)
         .select(
             id_col, "_nc",
@@ -1317,7 +1312,6 @@ def doc_repetition(
         )
         .groupBy(id_col, "_nc", "_gn", "gh", "glen")
         .agg(F.count("*").alias("c"))
-        .persist()
     )
 
     bg = counts.filter(F.col("_gn") == 2)
@@ -1749,6 +1743,7 @@ def mixture_sample(
     )
 
 
+@held.owned
 def pack_sequences(
     docs: DataFrame, capacity: int, id_col: str = "doc_id",
     text_col: str = "text", n_partitions: int | None = None,
@@ -1770,9 +1765,9 @@ def pack_sequences(
     bucket totals broadcast back as offsets. The only driver materialization
     is bucket-count-sized; the per-doc explode fans out by
     ceil(n/capacity) + 1 at most. The narrow (id, n, pid, cum) relation
-    stays persisted under the returned DataFrame (it pins one sampled
-    range partitioning — see the in-body comment); looping callers should
-    unpersist/clearCache between batches."""
+    stays persisted for as long as the returned DataFrame lives (it pins
+    one sampled range partitioning — see the in-body comment), so keep
+    that frame referenced until everything derived from it has run."""
     if capacity <= 0:
         raise ValueError("capacity must be positive")
     from pyspark.sql import Window
@@ -1800,7 +1795,7 @@ def pack_sequences(
     # repartitionByRange re-samples with a fresh rdd-id-derived seed, so
     # two separate computations could disagree). The cached relation is
     # (id, n, pid, cum) — narrow rows, MEMORY_AND_DISK at corpus scale.
-    based = base.withColumn("_cum_local", local).persist()
+    based = held.persist(base.withColumn("_cum_local", local))
     totals = sorted(
         (r["_pid"], r["_t"])
         for r in based.groupBy("_pid").agg(F.max("_cum_local").alias("_t")).collect()
@@ -2134,6 +2129,7 @@ def winnow_fingerprints(
     )
 
 
+@held.owned
 def winnow_pairs(
     docs: DataFrame,
     k: int = 5,
@@ -2156,7 +2152,7 @@ def winnow_pairs(
     # consumers below (bucket-cap count, join side a, join side b) — each
     # would re-run the whole fold. Materialize it once; the fingerprint
     # set is ~2n/(w+1) longs per corpus, far smaller than the text
-    fp = fp.persist()
+    fp = held.persist(fp)
     fp = _cap_buckets(fp, "fp", max_bucket)
     a = fp.select(F.col(id_col).alias("id_a"), "fp")
     b = fp.select(F.col(id_col).alias("id_b"), "fp")

@@ -62,11 +62,17 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from perfbench.run import box_facts, driver_heap_gb
 
+    # sized to the box like the benchmark of record: one task slot per
+    # core, a fifth of RAM (1-4 GB) for the driver heap unless
+    # $SPARK_GRAFT_MEM says otherwise
+    box = box_facts()
+    heap = f"{driver_heap_gb(box['mem_total_bytes'])}g"
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
+        SparkSession.builder.master(f"local[{box['nproc']}]")
+        .config("spark.sql.shuffle.partitions", str(box["nproc"]))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", heap))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")

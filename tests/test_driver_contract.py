@@ -2,6 +2,7 @@
 on Spark AND its oracle_sql() on DuckDB over the same parquet, compare
 row count + sorted-row values exactly."""
 
+import gc
 import math
 from pathlib import Path
 
@@ -9,6 +10,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from pq_spark import held
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -85,9 +87,29 @@ def _check_query(spark, name):
 _NAMES = sorted(QUERIES)
 
 
+def _cache_is_empty(spark) -> bool:
+    gc.collect()
+    held.release_pending()
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_rebuilt_query_leaves_no_cache(spark):
+    """Rebuilding a query that materializes a frame (gap-fill's partials)
+    in one session must not pile up or reuse cache entries: each build's
+    frame is released once the built DataFrame is gone."""
+    spark.catalog.clearCache()
+    for _ in range(3):
+        df = QUERIES["gapfill_1m_day1"](spark, SF_DIR)
+        df.write.format("noop").mode("overwrite").save()
+    del df
+    assert _cache_is_empty(spark)
+
+
 def test_query_against_oracle(spark):
     import traceback
     from concurrent.futures import ThreadPoolExecutor
+
+    spark.catalog.clearCache()
 
     def run(name):
         try:
@@ -99,3 +121,5 @@ def test_query_against_oracle(spark):
     with ThreadPoolExecutor(max_workers=12) as ex:
         failures = [f for f in ex.map(run, _NAMES) if f]
     assert not failures, "\n".join(failures)
+    # every registered query released what it materialized
+    assert _cache_is_empty(spark)

@@ -362,8 +362,13 @@ def test_extraction_violation_blocks_publish(spark, tmp_path, pages):
         ),
     )
     out = str(tmp_path / "tiers_bad")
+    pages.count()  # the module's cached pages are not the pipeline's to release
+    held_rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = held_rdds().size()
     with pytest.raises(RuntimeError, match="extraction invariant violated"):
         run_pipeline(spark, bad, out, pack=False)
+    # the raise releases every frame the pipeline cached on its way there
+    assert held_rdds().size() == before
     store = TierStore(out)
     # nothing visible: no CURRENT pointer, no snapshots, no manifests
     assert store.current_snapshot_id("tier_1m") is None
@@ -372,6 +377,24 @@ def test_extraction_violation_blocks_publish(spark, tmp_path, pages):
     # and a rerun after fixing the data starts from clean lineage state
     m = run_pipeline(spark, pages, out, pack=False)
     assert m["stages"]["tier_1m"]["partitions_written"] > 0
+
+
+def test_commit_failure_releases_its_cache(spark, tmp_path, samples, monkeypatch):
+    """A commit that raises after persisting its input (here: while sizing
+    the writers) releases that input instead of pinning it for the rest of
+    the session."""
+    tier = with_date(rollup_tier(samples, "1m"))
+    samples.count()  # the module's cached samples are not the commit's to release
+    held_rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = held_rdds().size()
+
+    def boom(*_args):
+        raise RuntimeError("injected writer-width failure")
+
+    monkeypatch.setattr(TierStore, "_writer_width", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        TierStore(str(tmp_path)).commit(tier, "tier_1m")
+    assert held_rdds().size() == before
 
 
 def test_lineage_fingerprint_on_ansi_session(spark, tmp_path, samples):
