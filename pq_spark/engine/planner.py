@@ -446,9 +446,9 @@ class Planner:
         # each would otherwise re-ANALYZE the whole fact lineage under the
         # cached plan — the truncated LogicalRDD leaf makes every
         # downstream plan small (measured: −0.1 s build and −0.05 s exec
-        # per grid query at sf0.1). Content is identical; the evaluation's
-        # scope holds it, and the ContextCleaner frees the blocks once no
-        # frame of the query refers to them.
+        # per grid query at sf0.1). Content is identical; the blocks are
+        # freed by the ContextCleaner once the query's frames are
+        # released (same lifecycle textops.dedup_components relies on).
         per_series = held.checkpoint(
             matched.select(_sig2_expr(F.col("labels")).alias("_sig2"), "ts")
             .groupBy("_sig2")
@@ -1234,7 +1234,9 @@ class Planner:
             raise PqError("timestamp expects an instant vector selector")
         swapped = replace(
             self.ctx,
-            samples=self.ctx.samples.withColumn("value", F.col("ts") / F.lit(1000.0)),
+            samples=self.ctx.samples.withColumn(
+                "value", F.col("ts") / F.lit(1000.0)
+            ),
         )
         saved, self.ctx = self.ctx, swapped
         try:

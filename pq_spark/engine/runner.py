@@ -20,7 +20,7 @@ from ..query.ast import Expr, VectorSelector
 from ..timeparse import parse_duration, try_parse_time
 from . import formatter as fmt
 from . import ingest
-from .frames import ScalarResult, ScalarSeries, VectorFrame
+from .frames import RangeFrame, ScalarResult, ScalarSeries, VectorFrame
 from .planner import PlanContext, Planner
 
 ENGINE_CONFS = {
@@ -91,11 +91,24 @@ def _disable_dataframe_debugging(spark: SparkSession) -> None:
         pass
 
 
-def _count_selectors(node: Expr) -> int:
-    if isinstance(node, VectorSelector):
+def _count_selectors(node) -> int:
+    from ..query import ast as A
+
+    if isinstance(node, A.VectorSelector):
         return 1
-    kids = [k for v in vars(node).values() for k in (v if isinstance(v, list) else [v])]
-    return sum(_count_selectors(k) for k in kids if isinstance(k, Expr))
+    if isinstance(node, A.Parentheses):
+        return _count_selectors(node.inner)
+    if isinstance(node, A.UnaryOperation):
+        return _count_selectors(node.inner)
+    if isinstance(node, A.AggregateOperation):
+        return _count_selectors(node.inner)
+    if isinstance(node, A.BinaryOperation):
+        return _count_selectors(node.lhs) + _count_selectors(node.rhs)
+    if isinstance(node, A.FunctionCall):
+        return sum(_count_selectors(a) for a in node.args if isinstance(a, A.Expr))
+    if isinstance(node, A.Subquery):
+        return _count_selectors(node.inner)
+    return 0
 
 
 @dataclass
@@ -146,6 +159,19 @@ class ProgramResult:
             if self.formatter is None:
                 return fmt.records_human_lines(self.records, verbose)
         raise PqError(f"unsupported formatter for {self.kind} output")
+
+    def dataframe(self) -> DataFrame:
+        """Relational access to the result (engine-level API)."""
+        if self.kind == "entries":
+            return self.entries
+        if self.kind == "records":
+            return self.records
+        qr = self.query_result
+        if isinstance(qr, VectorFrame):
+            return qr.cells
+        if isinstance(qr, RangeFrame):
+            return qr.points
+        raise PqError("scalar result has no DataFrame form")
 
 
 class PqEngine:
@@ -208,7 +234,6 @@ class PqEngine:
 
     # -- query over an arbitrary samples fact table ---------------------------
 
-    @held.owned
     def evaluate(
         self,
         query: Expr | str,
@@ -250,9 +275,7 @@ class PqEngine:
             )
             facts = result.facts.select("instant", skey.alias("skey"), "value")
             result = VectorFrame(result.grid, facts, dim, result.checks)
-        # kept for callers that release the planning frames themselves
-        # (perfbench/serve.py); the scope releases them in any case
-        self.last_persisted = held.frames()
+        self.last_persisted = []  # perfbench/serve.py releases it; planning persists nothing
         return result
 
 

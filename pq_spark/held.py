@@ -1,23 +1,21 @@
 """The one owner of materialized frames: every ``persist``,
 ``localCheckpoint`` and release in ``pq_spark`` goes through here.
 
-``with scope():`` releases what was materialized inside the block when it
-ends or raises. An ``@owned`` entry point joins the active scope, so a
-nested call never releases under its caller; with none active it opens
-one that is released when its result is garbage-collected (the result
-must not be one of its own frames). ``persist``/``checkpoint`` register
-with the calling thread's innermost scope. Releasing unpersists a
-persisted frame and only drops a checkpoint: freeing a live checkpoint's
-blocks breaks reads of frames derived from it, and the ContextCleaner
-frees it once no plan refers to it.
+``with scope():`` unpersists what was persisted inside the block when it
+ends or raises; ``persist`` registers with the calling thread's innermost
+scope. An ``@owned`` entry point joins the active scope, so a nested call
+never releases under its caller; with none active it opens one that is
+released when its result is garbage-collected (the result must not be one
+of its own frames, and frames derived from the result do not keep it
+alive). ``checkpoint`` needs no scope: a local checkpoint lives as long as
+a plan refers to it, and the ContextCleaner frees it after that — freeing
+a live checkpoint's blocks breaks reads of the frames derived from it.
 """
 
 from __future__ import annotations
 
-import gc
 import threading
 import weakref
-from collections import deque
 from functools import wraps
 
 from py4j.protocol import Py4JError
@@ -30,68 +28,27 @@ class _Local(threading.local):
 
 
 _local = _Local()
-# owners collected by a cyclic gc pass, which can run in the middle of a
-# py4j call: released when the next scope opens (as py4j defers its own)
-_pending: deque = deque()
-_in_gc = False
-
-
-def _gc_phase(phase: str, _info: dict) -> None:
-    global _in_gc
-    _in_gc = phase == "start"
-
-
-gc.callbacks.append(_gc_phase)
-
-
-def _release(frames: list[tuple[DataFrame, bool]]) -> None:
-    for frame, persisted in frames:
-        if persisted:
-            frame.unpersist()
 
 
 class scope:
     def __init__(self):
-        self.frames: list[tuple[DataFrame, bool]] = []  # (frame, persisted)
+        self.frames: list[DataFrame] = []  # persisted inside the block
 
     def __enter__(self) -> scope:
-        release_pending()
         _local.stack.append(self)
         return self
 
     def __exit__(self, *_exc) -> None:
         _local.stack.pop()
-        _release(self.frames)
+        _unpersist(self.frames)
 
 
-def _innermost() -> scope:
-    if not _local.stack:
-        raise RuntimeError("materialize frames inside held.scope() or an @owned call")
-    return _local.stack[-1]
-
-
-def _release_quietly(frames: list) -> None:
+def _unpersist(frames: list[DataFrame]) -> None:
     try:
-        _release(frames)
+        for df in frames:
+            df.unpersist()
     except Py4JError:
         pass  # the session stopped first, and with it every cached frame
-
-
-def release_pending() -> None:
-    """Release what the owners a gc pass collected held."""
-    while True:
-        try:  # popleft is atomic; other threads may drain concurrently
-            frames = _pending.popleft()
-        except IndexError:
-            return
-        _release_quietly(frames)
-
-
-def _release_owned(frames: list) -> None:
-    if _in_gc:
-        _pending.append(frames)
-    else:
-        _release_quietly(frames)
 
 
 def owned(fn):
@@ -103,31 +60,28 @@ def owned(fn):
             out = fn(*args, **kwargs)
             kept, s.frames = s.frames, []
         if kept:
-            weakref.finalize(out, _release_owned, kept).atexit = False
+            weakref.finalize(out, _unpersist, kept).atexit = False
         return out
 
     return call
 
 
 def persist(df: DataFrame) -> DataFrame:
-    s = _innermost()
-    s.frames.append((df.persist(), True))
-    return s.frames[-1][0]
+    if not _local.stack:
+        raise RuntimeError("persist inside held.scope() or an @owned call")
+    df = df.persist()
+    _local.stack[-1].frames.append(df)
+    return df
 
 
 def checkpoint(df: DataFrame, eager: bool) -> DataFrame:
-    s = _innermost()
-    s.frames.append((df.localCheckpoint(eager=eager), False))
-    return s.frames[-1][0]
+    return df.localCheckpoint(eager=eager)
 
 
 def release(df: DataFrame) -> None:
-    """Release one frame of the innermost scope before the scope ends."""
-    s = _innermost()
-    _release([p for p in s.frames if p[0] is df])
-    s.frames = [p for p in s.frames if p[0] is not df]
-
-
-def frames() -> list[DataFrame]:
-    """The frames the innermost scope holds."""
-    return [f for f, _ in _innermost().frames]
+    """Unpersist one frame of the innermost scope before the scope ends
+    (a checkpoint is not held, so releasing one does nothing)."""
+    s = _local.stack[-1]
+    if any(f is df for f in s.frames):
+        s.frames = [f for f in s.frames if f is not df]
+        df.unpersist()

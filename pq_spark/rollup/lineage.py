@@ -366,14 +366,23 @@ class TierStore:
                 data_rel = os.path.join("data", cid)
                 # repartition by (partition value, bounded content-hash split):
                 # pure repartition(part_col) would funnel EVERY row of a date
-                # through ONE writer task, while a raw write would emit
-                # (tasks × partitions) small files. Each stale partition's
-                # split width comes from its EXACT row count, which the
-                # fingerprint pass computed (``_writer_width``), so a small
-                # date committed next to a big one is not shattered into
-                # tiny files. The key hashes a stable atomic column, so the
-                # layout is deterministic for a deterministic input.
+                # through ONE writer task — a serialization point at any scale
+                # (a 3-day corpus writes on 3 cores of a 1000-core cluster) —
+                # while a raw write would emit (tasks × partitions) small
+                # files. The sub-split width is derived from the EXACT row
+                # counts the fingerprint pass already computed: the busiest
+                # stale partition gets ceil(rows / target_rows_per_file)
+                # writer tasks, capped at the session's parallelism — so a
+                # 10B-row date still spreads over every writer core while a
+                # cascade tier's few-thousand-row date writes one file
+                # instead of parallelism-many tiny ones. The key hashes a
+                # stable atomic column so the layout is deterministic for a
+                # deterministic input.
                 par = df.sparkSession.sparkContext.defaultParallelism
+                # split width PER stale partition, from its exact row count:
+                # a global max-based width would shatter a small date committed
+                # alongside a big one into max-width tiny files (the round-6
+                # small-tier tax, reappearing WITHIN a mixed-size commit)
                 k_by_part = {
                     str(p): self._writer_width(int(fps[p]["rows"]), par)
                     for p in stale
@@ -438,17 +447,27 @@ class TierStore:
             "elapsed_s": round(time.time() - t0, 3),
             **(stage_metrics or {}),
         }
-        result.pending = {
-            "table": table,
-            "manifests": staged_manifests,
-            "snapshot": {
-                "ts": time.time(),
-                "written": result.written,
-                "skipped": result.skipped,
-                "metrics": result.metrics,
-            },
+        snap_entry = {
+            "ts": time.time(),
+            "written": result.written,
+            "skipped": result.skipped,
+            "metrics": result.metrics,
         }
-        return self.finalize_commit(result) if publish else result
+        if not publish:
+            result.pending = {
+                "table": table,
+                "manifests": staged_manifests,
+                "snapshot": snap_entry,
+            }
+            return result
+        for part, entry in staged_manifests:
+            self._write_manifest(table, part, entry)
+        self._append_snapshot(table, snap_entry)
+        result.metrics["snapshot_id"] = self._publish_snapshot(table)
+        result.metrics["snapshot_converged"] = bool(
+            getattr(self, "last_publish_converged", True)
+        )
+        return result
 
     def finalize_commit(self, result: CommitResult) -> CommitResult:
         """Second half of a ``publish=False`` commit: write the staged

@@ -24,9 +24,10 @@ from .pages import (
     _PAGE_TABLE_ARGS,
     _page_enriched,
     extract_text_udf,
+    page_samples,  # noqa: F401 — public seam, used by tests/benchmarks
     page_series_dim_from_enriched,
 )
-from .tiers import attach_series, tier_from_tier, tier_partials
+from .tiers import TIER_MS, attach_series, tier_from_tier, tier_partials
 
 
 def verify_extraction(pages: DataFrame) -> int:
@@ -69,7 +70,8 @@ def run_pipeline(
     # projection after the Gorilla commit, and all of them when a stage
     # raises (an extraction-invariant violation included).
     from ..engine.ingest import samples_from_table
-    from .tiers import series_key
+    from ..engine.planner import sig_expr
+    from .tiers import series_dim, series_key  # noqa: F401
 
     with held.scope():
         if cache_pages:
@@ -81,13 +83,17 @@ def run_pipeline(
         # Arrow UDF is paid exactly once, and the post-write `sum(_bad)`
         # below is a cache hit.
         enriched = held.persist(_page_enriched(pages, verify=check_extraction))
-        # keyed by the statically-concatenated `_sig` samples_from_table
+        samples_wide = samples_from_table(enriched, **_PAGE_TABLE_ARGS)
+        # `_sig` is the statically-concatenated signature samples_from_table
         # precomputes (same string sig_expr derives from the map, minus the
-        # per-row map build/sort)
+        # per-row map build/sort) — fall back for sample sources without it
+        skey_col = (
+            series_key(F.col("_sig"))
+            if "_sig" in samples_wide.columns
+            else series_key(sig_expr(F.col("labels")))
+        )
         samples = held.persist(
-            samples_from_table(enriched, **_PAGE_TABLE_ARGS).select(
-                series_key(F.col("_sig")).alias("skey"), "ts", "seq", "value"
-            )
+            samples_wide.select(skey_col.alias("skey"), "ts", "seq", "value")
         )
         # label-space fast path: one narrow aggregate over page rows instead
         # of a signature-distinct over the 3x-wider sample union (round-5
@@ -194,10 +200,13 @@ def main() -> None:
     ap.add_argument("--no-pack", action="store_true")
     args = ap.parse_args()
 
-    from ..engine.runner import configure_session
-
     spark = SparkSession.builder.appName("pq_spark-rollup").getOrCreate()
-    configure_session(spark)  # before the page plan is analyzed
+    for k, v in {
+        "spark.sql.ansi.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "true",
+    }.items():
+        spark.conf.set(k, v)
 
     if args.synth_pages:
         from .pages import synth_pages

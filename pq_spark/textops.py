@@ -265,14 +265,12 @@ def dedup_components(
     never quadratic. Rounds needed = component diameter (near-dup clusters
     are shallow; the loop stops at the first unchanged round). Each
     round's labels are persisted and the previous round released so
-    lineage stays one round deep; the RESULT is materialized into an eager
+    lineage stays one round deep; the RESULT is an eager
     ``localCheckpoint`` and the loop's ``held.scope`` releases everything
-    else before returning, or on a raise — repeated calls in one session
-    leave nothing pinned in storage (the checkpoint blocks are freed when
-    the returned DataFrame is garbage-collected). Callers that must
-    survive executor loss should write the result to a sink promptly
-    (localCheckpoint stores on executors, the standard trade-off for
-    truncating iterative lineage).
+    else when it returns or raises. Callers that must survive executor
+    loss should write the result to a sink promptly (localCheckpoint
+    stores on executors, the standard trade-off for truncating iterative
+    lineage).
 
     LOGICAL-PLAN growth is handled separately from data caching: persist
     caches rows but leaves the plan intact, and each round's plan
@@ -1743,7 +1741,6 @@ def mixture_sample(
     )
 
 
-@held.owned
 def pack_sequences(
     docs: DataFrame, capacity: int, id_col: str = "doc_id",
     text_col: str = "text", n_partitions: int | None = None,
@@ -1765,9 +1762,9 @@ def pack_sequences(
     bucket totals broadcast back as offsets. The only driver materialization
     is bucket-count-sized; the per-doc explode fans out by
     ceil(n/capacity) + 1 at most. The narrow (id, n, pid, cum) relation
-    stays persisted for as long as the returned DataFrame lives (it pins
-    one sampled range partitioning — see the in-body comment), so keep
-    that frame referenced until everything derived from it has run."""
+    is an eager local checkpoint (it pins one sampled range partitioning —
+    see the in-body comment) that lives as long as any plan built on the
+    returned DataFrame; the ContextCleaner frees it after that."""
     if capacity <= 0:
         raise ValueError("capacity must be positive")
     from pyspark.sql import Window
@@ -1790,12 +1787,14 @@ def pack_sequences(
         Window.partitionBy("_pid").orderBy(F.col(id_col).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # persist pins ONE range partitioning: the bucket-total collect and the
-    # main output must see identical _pid boundaries (a re-planned
+    # the checkpoint pins ONE range partitioning: the bucket-total collect
+    # and the main output must see identical _pid boundaries (a re-planned
     # repartitionByRange re-samples with a fresh rdd-id-derived seed, so
-    # two separate computations could disagree). The cached relation is
-    # (id, n, pid, cum) — narrow rows, MEMORY_AND_DISK at corpus scale.
-    based = held.persist(base.withColumn("_cum_local", local))
+    # two separate computations could disagree). A checkpoint rather than a
+    # persist, because it cannot be released while a derived plan still
+    # reads it. The stored relation is (id, n, pid, cum) — narrow rows,
+    # MEMORY_AND_DISK at corpus scale.
+    based = held.checkpoint(base.withColumn("_cum_local", local), eager=True)
     totals = sorted(
         (r["_pid"], r["_t"])
         for r in based.groupBy("_pid").agg(F.max("_cum_local").alias("_t")).collect()

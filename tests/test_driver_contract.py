@@ -10,7 +10,6 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
-from pq_spark import held
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -89,7 +88,6 @@ _NAMES = sorted(QUERIES)
 
 def _cache_is_empty(spark) -> bool:
     gc.collect()
-    held.release_pending()
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

@@ -397,6 +397,37 @@ def test_sample_weighted_semantics(spark):
     assert sorted(r["doc_id"] for r in got2) == ids
 
 
+def test_pack_sequences_pin_outlives_its_frame(spark):
+    """A frame derived from pack_sequences' result still reads the one
+    range partitioning its offsets were computed from after the result
+    itself is collected: the pinned relation stays materialized and the
+    packing matches the one read through the kept result."""
+    import gc
+
+    from pq_spark.textops import pack_sequences
+
+    docs = spark.range(300).selectExpr(
+        "id AS doc_id", "trim(repeat('w ', CAST(id % 7 AS INT))) AS text"
+    )
+
+    def rows(df):
+        return sorted(
+            (r["bin_id"], r["doc_id"], r["tok_off_in_doc"], r["off_in_bin"],
+             r["seg_tokens"]) for r in df.where("bin_id % 2 = 0").collect()
+        )
+
+    kept = pack_sequences(docs, capacity=16, n_partitions=4)
+    direct = rows(kept)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    chained = pack_sequences(docs, capacity=16, n_partitions=4).where("bin_id >= 0")
+    pinned = set(jsc.getPersistentRDDs()) - before
+    gc.collect()
+    spark._jvm.System.gc()
+    assert pinned and pinned <= set(jsc.getPersistentRDDs())
+    assert rows(chained) == direct
+
+
 def test_pack_sequences_semantics(spark):
     from pq_spark.textops import pack_sequences
 
